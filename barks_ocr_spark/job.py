@@ -8,8 +8,7 @@ Cluster usage (the production shape the north rule specifies):
         -m ...  barks_ocr_spark/job.py \\
         --input  s3://corpus/docs \\
         --output /warehouse/extracted_spans \\
-        --checkpoint /warehouse/extraction_ckpt \\
-        --partitions 4096
+        --checkpoint /warehouse/extraction_ckpt
 
 Local sandbox: ``python -m barks_ocr_spark.job --input ... --output ...``
 (the session factory ships the package zip itself via addPyFile).
@@ -30,7 +29,15 @@ def main() -> None:
     p.add_argument("--output", required=True, help="result snapshot-table path")
     p.add_argument("--checkpoint", required=True, help="checkpoint-table path")
     p.add_argument("--page-scans", default=None, help="optional page-scans table (J9)")
-    p.add_argument("--partitions", type=int, default=None, help="kernel-stage partitions")
+    p.add_argument(
+        "--partitions",
+        type=int,
+        default=None,
+        help="upper bound on pass-2 kernel tasks, merged without a shuffle; "
+        "the merge also bounds the stage that feeds the kernel (the scan, or "
+        "on a resumed run the anti-join against committed docs), so leave it "
+        "unset at scale (default: one task per input partition)",
+    )
     p.add_argument("--master", default=None)
     args = p.parse_args()
 
@@ -40,7 +47,7 @@ def main() -> None:
 
     spark = get_spark("barks-ocr-extraction", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
-    docs = load_documents(spark, args.input)
+    docs = load_documents(spark, args.input, spread=True)
     scans = spark.read.parquet(args.page_scans) if args.page_scans else None
     job = ExtractionJob(args.output, args.checkpoint)
     summary = job.run(spark, docs, page_scans=scans, num_partitions=args.partitions)

@@ -169,7 +169,8 @@ def ngram_jaccard_pairs(
        surviving pair.
 
     The hot-shingle cap uses the true per-DOC frequency (a tiny
-    aggregate collected into a one-row array and removed array-side).
+    per-shingle aggregate, removed from the exploded postings by a
+    broadcast left-anti join before they regroup per set).
     Measured at sf1.0 / local[32] (a 2×-duplicated 100k-doc corpus),
     best-of-2: 104.9 s (r6 self-join) → 24.9 s (hash postings + prune)
     → 13.6 s (distinct-set collapse) → see OPTIMIZATION_r07.md for the

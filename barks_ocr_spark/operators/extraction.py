@@ -9,12 +9,17 @@ Physical shape (designed for a 10^12-doc table):
       collected and broadcast (`books/src/book_pages.py:295-321`'s
       two-pass repeated-heading rule, distributed).
 
-  Pass 2 (narrow, shuffle-free): mapInPandas over the docs table runs the
-      whole per-document kernel (kernels/spans.py) on Arrow batches. Every
-      document's work is intra-row, so this stage scales linearly with
-      executors — no join, no shuffle, no skewed keys. Skewed giant docs
-      (splash pages with 100× spans) are stragglers, not hot shuffle
-      keys; `repartition(doc_id)` before the kernel spreads them evenly.
+  Pass 2 (narrow, shuffle-free): mapInArrow over the docs table's own
+      splits runs the whole per-document kernel (kernels/arrowspans.py)
+      on Arrow batches. Every document's work is intra-row, so this stage
+      scales linearly with executors — no join, no shuffle, no skewed
+      keys. A task cap merges splits with a narrow coalesce, never a
+      shuffle. Skewed giant docs (splash pages with 100× spans) are
+      stragglers, not hot shuffle keys. A table of at least
+      SPREAD_MIN_BYTES with fewer splits than the session's cores is
+      spread by doc_id when it is read (load_documents(spread=True),
+      which job.py uses); giant docs clustered in one parquet row group
+      still share one task.
 
 All string work is vectorized pandas inside the batch — no per-row
 Python UDFs anywhere.
@@ -229,6 +234,14 @@ def extract(
     ``kernel="pandas"`` keeps the golden pandas path (kernels/spans.py);
     byte-identical output is pinned by tests/test_arrow_kernel.py and
     the e2e golden tests.
+
+    The kernel runs on ``docs``' own partitions: pass 2 adds no shuffle.
+    ``num_partitions`` caps the kernel at that many tasks, merging
+    partitions with a narrow ``coalesce`` — a no-op when ``docs`` already
+    has that many or fewer; ``None`` leaves the partitions as they are.
+    Being narrow, the merge also caps the stage that produces ``docs``
+    (its scan, or the anti-join of ``ExtractionJob.run``). Output is
+    identical at any partitioning.
     """
     spark = docs.sparkSession
     if repeating is None:
@@ -239,8 +252,7 @@ def extract(
     if page_scans is not None:
         docs = inject_page_scans(docs, page_scans)
     if num_partitions is not None:
-        # spread skewed giant docs (single rows) evenly across tasks
-        docs = docs.repartition(num_partitions, "doc_id")
+        docs = docs.coalesce(num_partitions)
 
     narrow = docs.select("doc_id", "spans")
     if kernel == "arrow":
@@ -285,9 +297,43 @@ def extraction_metrics(result: DataFrame) -> DataFrame:
     )
 
 
-def load_documents(spark: SparkSession, path: str) -> DataFrame:
-    """Read an interleaved-docs parquet/Iceberg table."""
-    return spark.read.parquet(path)
+# Below this size the doc_id shuffle of load_documents(spread=True)
+# costs as much as the kernel work it parallelizes. Measured at local[4],
+# single-row-group tables, pass 2 with the heading set precomputed,
+# kernel in one task vs spread to 4: 1.2 MB 0.65 s vs 0.67 s, 2.4 MB
+# 0.83-1.07 s vs 0.75-0.82 s, 4.7 MB 1.6-2.0 s vs 1.14 s, 12 MB 3.4-3.6 s
+# vs 2.3 s.
+SPREAD_MIN_BYTES = 2 * 1024 * 1024
+
+
+def load_documents(
+    spark: SparkSession, path: str, spread: bool = False
+) -> DataFrame:
+    """Read an interleaved-docs parquet/Iceberg table.
+
+    ``spread=True`` hash-partitions the table by doc_id into the
+    session's parallelism when its scan has fewer splits than that and
+    it holds at least ``SPREAD_MIN_BYTES``. Parquet cannot split a row
+    group, so a small table in one or a few files otherwise runs pass 2
+    in at most as many kernel tasks as it has row groups. A table with
+    enough splits is read as it is and pays no shuffle."""
+    df = spark.read.parquet(path)
+    if spread:
+        par = spark.sparkContext.defaultParallelism
+        if (
+            df.rdd.getNumPartitions() < par
+            and _table_bytes(spark, path) >= SPREAD_MIN_BYTES
+        ):
+            df = df.repartition(par, "doc_id")
+    return df
+
+
+def _table_bytes(spark: SparkSession, path: str) -> int:
+    """Bytes under ``path``, through the Hadoop FileSystem API (works
+    for file://, hdfs://, s3a:// alike)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.getContentSummary(jpath).getLength()
 
 
 def fold_footnote_items(items: DataFrame) -> DataFrame:

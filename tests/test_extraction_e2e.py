@@ -165,19 +165,48 @@ def test_adversarial_heading_set_is_bounded_and_deterministic(spark):
 
 def test_extract_identical_across_partition_counts(spark):
     """North-rule invariant: the same corpus at different parallelism
-    levels yields byte-identical per-doc span sequences."""
+    levels yields byte-identical per-doc span sequences — including a
+    task cap below the input's partition count, which merges partitions
+    before the kernel."""
     pdf = dg.gen_documents(300, seed=33)
     docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SPANS_SCHEMA)
 
-    def run(n):
+    def run(n_in, cap):
         return {
             r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
             for r in extraction.extract(
-                docs.repartition(n), num_partitions=n
+                docs.repartition(n_in), num_partitions=cap
             ).collect()
         }
 
-    assert run(2) == run(13)
+    ref = run(2, 2)
+    assert len(ref) == 300
+    assert run(13, 13) == ref
+    assert run(13, 2) == ref
+
+
+def test_load_documents_spreads_only_few_split_tables(spark, tmp_path, monkeypatch):
+    """``spread=True`` hash-partitions a table that scans as fewer splits
+    than the session's parallelism, once it holds SPREAD_MIN_BYTES; a
+    table below the size gate, or with enough splits, is read as it is."""
+    docs = spark.createDataFrame(
+        dg.gen_documents(200, seed=5), schema=DOCUMENTS_SPANS_SCHEMA
+    )
+    one, many = str(tmp_path / "one"), str(tmp_path / "many")
+    docs.coalesce(1).write.parquet(one)
+    par = spark.sparkContext.defaultParallelism
+    # small files pack into about `par` scan splits, whatever their number
+    docs.repartition(4 * par).write.parquet(many)
+
+    def parts(path, spread):
+        df = extraction.load_documents(spark, path, spread=spread)
+        return df.rdd.getNumPartitions()
+
+    # the 200-doc table is below the size gate
+    assert parts(one, True) == parts(one, False) == 1
+    monkeypatch.setattr(extraction, "SPREAD_MIN_BYTES", 0)
+    assert parts(one, True) == par
+    assert parts(many, True) == parts(many, False) >= par
 
 
 def test_pass1_intra_doc_repeats_count_once(spark):

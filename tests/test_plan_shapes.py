@@ -30,6 +30,52 @@ def test_extraction_kernel_pass_has_no_shuffle(spark):
     assert "MapInArrow" in plan
 
 
+def _stage_tasks(spark, group: str, action) -> list[int]:
+    """Task count of every stage the jobs run by ``action`` ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return [
+        tracker.getStageInfo(stage).numTasks
+        for job in sorted(tracker.getJobIdsForGroup(group))
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+
+
+def test_extraction_task_cap_merges_partitions_without_shuffle(spark):
+    """``num_partitions`` caps pass 2 at n tasks by merging the input's
+    partitions (narrow coalesce), never by a doc_id shuffle; a cap at or
+    above the partition count leaves the partitions as they are."""
+    # 13 input partitions with no Exchange of their own
+    docs = spark.range(0, 130, 1, 13).select(
+        F.format_string("doc%07d", "id").alias("doc_id"),
+        F.array(
+            F.struct(
+                F.lit("text").alias("kind"),
+                F.format_string("the duck found nugget %d today.", "id").alias("text"),
+                F.lit("").alias("media_ref"),
+                F.lit(0).alias("offset"),
+            )
+        ).alias("spans"),
+    )
+
+    for cap, tasks in [(4, 4), (13, 13), (20, 13), (None, 13)]:
+        out = extraction.extract(docs, repeating=frozenset(), num_partitions=cap)
+        plan = _plan(out)
+        assert "Exchange" not in plan
+        assert "MapInArrow" in plan
+        ran = _stage_tasks(
+            spark,
+            f"extract-cap-{cap}",
+            lambda: out.write.format("noop").mode("overwrite").save(),
+        )
+        assert ran == [tasks], (cap, ran)
+
+
 def test_extract_spans_scan_prunes_columns(spark):
     docs = Q._spanized_docs(spark, SF)
     plan = _plan(extraction.extract(docs, repeating=frozenset()))

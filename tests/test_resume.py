@@ -90,16 +90,24 @@ def test_resume_uses_full_corpus_heading_set(spark, tmp_path):
     # Emulate a run killed after committing its first batch: that batch
     # was extracted under the full-corpus heading set (the killed run saw
     # the whole table), then the job resumes over the full table.
-    job = ExtractionJob(str(tmp_path / "res"), str(tmp_path / "ckpt"))
     rep = frozenset(
         r["variant"]
         for r in extraction.repeating_headings(docs).collect()
     )
     first = docs.filter("doc_id < 'doc0000005'")
-    job.results.append(extraction.extract(first, repeating=rep))
-    r = job.run(spark, docs)
-    assert r["docs"] == 5
-    assert as_map(job.read_results(spark)) == full
+    # the kernel-task cap changes the checkpoint rows, never the spans
+    for cap in (None, 1):
+        job = ExtractionJob(
+            str(tmp_path / f"res{cap}"), str(tmp_path / f"ckpt{cap}")
+        )
+        job.results.append(extraction.extract(first, repeating=rep))
+        r = job.run(spark, docs, num_partitions=cap)
+        assert r["docs"] == 5
+        assert as_map(job.read_results(spark)) == full
+        ckpt = job.read_checkpoints(spark).collect()
+        assert sum(row["pages_processed"] for row in ckpt) == 5
+    # cap 1: one kernel task, so one checkpoint row
+    assert len(ckpt) == 1
 
 
 def test_uncommitted_snapshot_invisible(spark, tmp_path):
