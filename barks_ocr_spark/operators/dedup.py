@@ -208,9 +208,11 @@ def ngram_jaccard_pairs(
     sh = shingles_from_text(F.col("_text"), n)
     harr = F.sort_array(F.transform(sh, lambda x: F.xxhash64(x)))
     # one row per DISTINCT text, with its doc multiplicity and the
-    # sorted shingle-hash array — eagerly materialized: the hot list
-    # below feeds a BROADCAST build side, which recomputes a lazily
-    # persisted input instead of reading the cache
+    # sorted shingle-hash array — eagerly materialized. Measured with
+    # pyspark 4.1.2 at local[4] on the 800-doc benchmark hygiene corpus
+    # (two traced runs): without this count the build runs 0 jobs
+    # instead of 4 (0.80/0.64 s instead of 0.98/1.07 s), but the pairs
+    # action takes 2.03/1.95 s instead of 1.35/1.46 s
     usets = _persist(
         utexts.filter(F.size(sh) > 0).select(
             "_set",
@@ -493,9 +495,11 @@ def minhash_lsh_candidates(
     ngram_jaccard_pairs). Measured at sf1.0: candidate stage 6.0 s →
     5.1 s best-of-2, identical candidate sets.
     """
-    # Persist AND eagerly materialize: a lazily-materialized cache
-    # inside the same action still recomputes on the broadcast-build
-    # side (measured 280s lazy vs 2s eager on 1k docs). Band structs
+    # Persist AND eagerly materialize. Measured with pyspark 4.1.2 at
+    # local[4] on the 800-doc benchmark hygiene corpus (two traced
+    # runs): without this count the build runs 0 jobs instead of 5
+    # (0.93/0.96 s instead of 1.54/1.57 s), but the pairs action takes
+    # 1.37/1.41 s instead of 0.67/0.68 s, a net loss. Band structs
     # are UNROLLED literal expressions (one concrete slice+hash per
     # band, whole-stage codegen) rather than a transform() lambda,
     # which evaluates per element through the interpreted HOF path —
@@ -923,8 +927,14 @@ def simhash_near_duplicates(
     differ between the two, pair semantics do not).
     """
     sig_fn = simhash_signatures_kernel if use_kernel else simhash_signatures
+    # ``sigs`` is filled by the first action that reads it. The eager
+    # count of ``exploded`` stays: with pyspark 4.1.2 at local[4] on the
+    # 800-doc benchmark hygiene corpus (two traced runs), dropping the
+    # ``sigs`` count took the build from 7 jobs to 5 at the same total
+    # time (build + pairs 1.42/1.40 s before, 1.19/1.42 s after), while
+    # dropping the ``exploded`` count left it mixed (1.14/1.54 s), the
+    # pairs action slower in both runs (0.41/0.51 s, from 0.35/0.31 s)
     sigs = _persist(sig_fn(docs, text_col))
-    sigs.count()
     usig = sigs.select("simhash").distinct()
     exploded = _persist(simhash_segment_table(usig, max_hamming))
     exploded.count()

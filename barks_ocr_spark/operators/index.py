@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.kernels import textnorm as tn
+from barks_ocr_spark.session import local_table
 
 # Exact Spark translation of the reference tokenizer
 # (make-word-index-from-gemini-ai-groups.py:251-265): lowercase; fold
@@ -213,9 +214,8 @@ def search_phrase(pos_index: DataFrame, phrase: str) -> DataFrame:
 def index_integrity_missing_terms(index: DataFrame, terms: list[str]) -> DataFrame:
     """Index integrity check (`pipeline/whoosh_index.py:33-57`): curated
     terms that are NOT findable in the index. Empty result = healthy."""
-    spark = index.sparkSession
-    curated = spark.createDataFrame(
-        [(t.lower(),) for t in terms], "term string"
+    curated = local_table(
+        index.sparkSession, [(t.lower(),) for t in terms], "term string"
     )
     return curated.join(
         index.select(F.col("word")).distinct(),

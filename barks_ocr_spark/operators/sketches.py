@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from barks_ocr_spark.session import local_table
+
 _HASH_SPACE = 4294967296.0  # 2^32 — the normalization denominator
 
 
@@ -219,7 +221,7 @@ def heavy_hitters(
         .collect()
     )
     if not rows:
-        return spark.createDataFrame([], "word string, n_occurrences long")
+        return local_table(spark, [], "word string, n_occurrences long")
     n_tokens = next(
         (r["n_occurrences"] for r in rows if r["word"] == "\x00total\x00"), 0
     )
@@ -233,7 +235,8 @@ def heavy_hitters(
             f"{top[-1]['n_occurrences']} <= {floor_bound:.0f} (the ceiling a "
             f"non-candidate word can reach); raise capacity above {capacity}"
         )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(r["word"], r["n_occurrences"]) for r in top],
         "word string, n_occurrences long",
     )

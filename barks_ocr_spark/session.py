@@ -12,7 +12,10 @@ import os
 import zipfile
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def build_pyfiles_zip(dest: str | None = None) -> str:
@@ -109,3 +112,20 @@ def get_spark(
         # package no matter where the driver script lives.
         spark.sparkContext.addPyFile(build_pyfiles_zip())
     return spark
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-side table (``rows`` of the DDL ``schema``) as a
+    DataFrame that plans as a ``LocalTableScan``.
+
+    Built from an Arrow table, so it lives in the plan itself: reading
+    it runs no task. ``spark.createDataFrame(rows)`` from a Python list
+    plans as ``Scan ExistingRDD`` instead, and collecting that starts
+    one Python worker task per partition (0.3-0.4 s at local[4] for a
+    four-row table, against about 0.015 s for this form).
+    """
+    struct = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table)

@@ -18,9 +18,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from barks_ocr_spark.operators import extraction
+from barks_ocr_spark.schemas import DOCUMENTS_SPANS_SCHEMA
 from barks_ocr_spark.sources.snapshots import SnapshotTable
+
+_DONE_IDS = StructType([DOCUMENTS_SPANS_SCHEMA["doc_id"]])
 
 
 class ExtractionJob:
@@ -38,10 +42,15 @@ class ExtractionJob:
         version they were last processed at (R2 — the reference's
         mtime-freshness rule, `pipeline/gemini_grouper.py:131-136`,
         keyed on an explicit monotonic version instead of wall clock)."""
+        if version_col is None:
+            # the results' doc_id is the extraction output's: a known
+            # type, so the anti-join side is read without inference
+            done = self.results.read(spark, schema=_DONE_IDS)
+            return docs if done is None else docs.join(done, "doc_id", "left_anti")
         done = self.results.read(spark)
         if done is None:
             return docs
-        if version_col is not None and version_col in done.columns:
+        if version_col in done.columns:
             latest = done.groupBy("doc_id").agg(
                 F.max(version_col).alias("_done_version")
             )
@@ -66,7 +75,8 @@ class ExtractionJob:
         """Process all pending docs; commit one snapshot + checkpoint rows.
 
         Returns a summary dict. Calling again after success is a no-op
-        (zero pending); calling after a mid-run kill re-processes only
+        (zero pending) that stops after counting the pending docs, before
+        pass 1 and the kernel; calling after a mid-run kill re-processes only
         the uncommitted docs — exactly-once in effect. With
         ``version_col`` (a monotonic version column on ``docs``),
         updated docs are re-processed and the version is recorded with
@@ -74,48 +84,62 @@ class ExtractionJob:
         :meth:`read_results_latest`.
         """
         pending = self.pending(spark, docs, version_col=version_col)
-        # The repeated-heading set (≥3 distinct docs) MUST come from the
-        # FULL docs table, not the pending remainder: a resumed run that
-        # recomputed it over pending-only would classify boilerplate
-        # differently than one uninterrupted run (a header on 4 docs with
-        # 3 already committed would survive the resumed pass), breaking
-        # the exactly-once-in-effect determinism and the reference's
-        # whole-book two-pass rule (books/src/book_pages.py:295-321).
-        repeating = extraction.repeating_heading_set(docs)
-        result = extraction.extract(
-            pending,
-            page_scans=page_scans,
-            repeating=repeating,
-            num_partitions=num_partitions,
-        )
-        if version_col is not None:
-            result = result.join(
-                pending.select("doc_id", version_col), "doc_id"
-            )
-        # Materialize once: metrics + data from the same computation.
-        result = result.persist()
+        # Materialize the pending docs once: their count is the run's doc
+        # count (pass 2 emits one row per doc), an empty remainder skips
+        # pass 1 and the kernel, and pass 2 reads the cached rows instead
+        # of re-running the anti-join. A first run's pending is ``docs``
+        # itself: no anti-join to save, and its count is a pruned scan.
+        cached = pending is not docs
+        if cached:
+            pending = pending.persist()
         try:
-            n = result.count()
+            n = pending.count()
             if n == 0:
                 return {"snapshot_id": self.results.last_snapshot_id(), "docs": 0}
-            sid = self.results.append(result, meta={"docs": n})
-            metrics = extraction.extraction_metrics(result).withColumn(
-                "snapshot_id", F.lit(sid).cast("long")
+            # The repeated-heading set (≥3 distinct docs) MUST come from
+            # the FULL docs table, not the pending remainder: a resumed
+            # run that recomputed it over pending-only would classify
+            # boilerplate differently than one uninterrupted run (a header
+            # on 4 docs with 3 already committed would survive the resumed
+            # pass), breaking the exactly-once-in-effect determinism and
+            # the reference's whole-book two-pass rule
+            # (books/src/book_pages.py:295-321).
+            repeating = extraction.repeating_heading_set(docs)
+            result = extraction.extract(
+                pending,
+                page_scans=page_scans,
+                repeating=repeating,
+                num_partitions=num_partitions,
             )
-            self.checkpoints.append(
-                metrics.select(
-                    "partition_id",
-                    "snapshot_id",
-                    "pages_processed",
-                    "spans_emitted",
-                    "docs_empty",
-                    "ocr_empty_rate",
-                ),
-                meta={"snapshot_id": sid},
-            )
-            return {"snapshot_id": sid, "docs": n}
+            if version_col is not None:
+                result = result.join(
+                    pending.select("doc_id", version_col), "doc_id"
+                )
+            # Metrics + data from the same computation: the snapshot
+            # write fills the cache the metrics read.
+            result = result.persist()
+            try:
+                sid = self.results.append(result, meta={"docs": n})
+                metrics = extraction.extraction_metrics(result).withColumn(
+                    "snapshot_id", F.lit(sid).cast("long")
+                )
+                self.checkpoints.append(
+                    metrics.select(
+                        "partition_id",
+                        "snapshot_id",
+                        "pages_processed",
+                        "spans_emitted",
+                        "docs_empty",
+                        "ocr_empty_rate",
+                    ),
+                    meta={"snapshot_id": sid},
+                )
+                return {"snapshot_id": sid, "docs": n}
+            finally:
+                result.unpersist()
         finally:
-            result.unpersist()
+            if cached:
+                pending.unpersist()
 
     def read_results(self, spark: SparkSession) -> DataFrame | None:
         return self.results.read(spark)

@@ -22,6 +22,7 @@ import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SnapshotTable:
@@ -56,12 +57,21 @@ class SnapshotTable:
         os.replace(tmp, self._manifest)
         return sid
 
-    def read(self, spark: SparkSession, upto_snapshot: int | None = None) -> DataFrame | None:
-        """Union of all committed snapshots (optionally time-traveled)."""
+    def read(
+        self,
+        spark: SparkSession,
+        upto_snapshot: int | None = None,
+        schema: StructType | None = None,
+    ) -> DataFrame | None:
+        """Union of all committed snapshots (optionally time-traveled).
+
+        ``schema`` reads just those columns of a known type and skips
+        inferring the schema from a file footer, a Spark job of its own."""
         snaps = self.snapshots()
         if upto_snapshot is not None:
             snaps = [s for s in snaps if s["snapshot_id"] <= upto_snapshot]
         if not snaps:
             return None
         paths = [str(self.path / s["dir"]) for s in snaps]
-        return spark.read.parquet(*paths)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)

@@ -6,6 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.operators import decontam, textstats
+from sparkjobs import group_jobs
+from test_plan_shapes import SF
 
 
 def _docs(spark, rows):
@@ -431,6 +433,134 @@ def test_clean_corpus_lineage_counters(spark, tmp_path):
         lineage_path=sink,
     )
     assert spark.read.parquet(sink).count() == 8
+
+
+def _lineage_by_counts(corpus, eval_docs, *, n, budget_tokens, min_words, min_mean_word_len):
+    """Differential oracle: the pipeline composed stage by stage with one
+    ``count()`` per stage boundary — the four-count lineage form the
+    observed counts replaced, each count re-running a prefix of the plan.
+    Returns the manifest and the sorted lineage rows."""
+    from barks_ocr_spark.operators import sampling
+    from barks_ocr_spark.operators.cacheutil import persist_tracked
+
+    gated = (
+        textstats.gopher_filter(
+            corpus,
+            min_words=min_words,
+            min_mean_word_len=min_mean_word_len,
+            passthrough=("text", "source"),
+        )
+        .filter("keep")
+        .select("doc_id", "text", "source")
+    )
+    scrubbed = persist_tracked(
+        textstats.pii_redact(gated, passthrough=("source",)).select(
+            "doc_id", F.col("text_redacted").alias("text"), "source"
+        )
+    )
+    scrubbed.count()
+    cleaned = decontam.decontaminate(scrubbed, eval_docs, n=n)
+    manifest = sampling.budget_sample(cleaned, "source", budget_tokens)
+    n_in = corpus.count()
+    n_scrubbed = scrubbed.count()
+    n_cleaned = cleaned.count()
+    n_sampled = manifest.count()
+    lineage = [
+        ("budget_sample", n_cleaned, n_sampled),
+        ("decontaminate", n_scrubbed, n_cleaned),
+        ("gopher_gate", n_in, n_scrubbed),
+        ("pii_scrub", n_scrubbed, n_scrubbed),
+    ]
+    return manifest, lineage
+
+
+# the registry's demo operating point over the sf0.001 documents: every
+# stage drops rows (gate, decontam at n = 3, a truncating budget)
+_DEMO_POINT = dict(n=3, budget_tokens=400, min_words=30, min_mean_word_len=4.0)
+
+
+def _demo_split(docs):
+    return (
+        docs.filter(F.col("doc_id") % 97 != 0),
+        docs.filter(F.col("doc_id") % 97 == 0),
+    )
+
+
+def _observed(corpus, eval_docs):
+    from barks_ocr_spark.operators import pipeline
+
+    manifest, lineage = pipeline.clean_corpus_with_lineage(corpus, eval_docs, **_DEMO_POINT)
+    return _rows(manifest), _rows(lineage)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_lineage_matches_four_count_oracle(spark):
+    """The observed lineage and the manifest equal the four-count form at
+    two corpus partitionings, and again on a second call in the same
+    session with the first call's caches still held: cache reuse must
+    neither zero nor double a count."""
+    from barks_ocr_spark.operators.cacheutil import unpersist_intermediates
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    try:
+        for parts in (1, 7):
+            corpus, eval_docs = _demo_split(docs.repartition(parts))
+            manifest, lineage = _lineage_by_counts(corpus, eval_docs, **_DEMO_POINT)
+            want = (_rows(manifest), lineage)
+            unpersist_intermediates()
+            counts = {stage: (i, o) for stage, i, o in lineage}
+            assert counts["gopher_gate"][1] < counts["gopher_gate"][0]
+            assert counts["decontaminate"][1] < counts["decontaminate"][0]
+            assert counts["budget_sample"][1] < counts["budget_sample"][0]
+            assert _observed(corpus, eval_docs) == want, parts
+            assert _observed(corpus, eval_docs) == want, parts
+            unpersist_intermediates()
+    finally:
+        unpersist_intermediates()
+
+
+def test_lineage_runs_one_action_and_caches_the_manifest(spark, tmp_path):
+    """The audited call runs fewer jobs than the four-count form, and the
+    manifest it returns is its cache: collecting it is one single-stage
+    job, and it still works after the source files are gone."""
+    import shutil
+
+    from barks_ocr_spark.operators import pipeline
+    from barks_ocr_spark.operators.cacheutil import unpersist_intermediates
+
+    src = tmp_path / "documents.parquet"
+    shutil.copy(f"{SF}/documents.parquet", src)
+    corpus, eval_docs = _demo_split(spark.read.parquet(str(src)))
+    out = {}
+    try:
+        oracle_jobs = group_jobs(
+            spark,
+            "lineage-four-counts",
+            lambda: out.setdefault("want", _lineage_by_counts(corpus, eval_docs, **_DEMO_POINT)),
+        )
+        want_manifest, want_lineage = _rows(out["want"][0]), out["want"][1]
+        unpersist_intermediates()
+        observed_jobs = group_jobs(
+            spark,
+            "lineage-observed",
+            lambda: out.setdefault(
+                "got", pipeline.clean_corpus_with_lineage(corpus, eval_docs, **_DEMO_POINT)
+            ),
+        )
+        assert len(observed_jobs) < len(oracle_jobs), (observed_jobs, oracle_jobs)
+        manifest, lineage = out["got"]
+        src.unlink()
+        collect_jobs = group_jobs(
+            spark, "lineage-manifest", lambda: out.setdefault("rows", _rows(manifest))
+        )
+        assert len(collect_jobs) == 1 and len(collect_jobs[0]) == 1, collect_jobs
+        assert out["rows"] == want_manifest
+        assert _rows(lineage) == want_lineage
+    finally:
+        unpersist_intermediates()
 
 
 # ─── c4_line_filter ──────────────────────────────────────────────────────

@@ -9,9 +9,11 @@ while becoming a 100 TB disaster.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from barks_ocr_spark.operators import extraction
 from barks_ocr_spark.plans import queries as Q
+from sparkjobs import group_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -32,18 +34,7 @@ def test_extraction_kernel_pass_has_no_shuffle(spark):
 
 def _stage_tasks(spark, group: str, action) -> list[int]:
     """Task count of every stage the jobs run by ``action`` ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    return [
-        tracker.getStageInfo(stage).numTasks
-        for job in sorted(tracker.getJobIdsForGroup(group))
-        for stage in tracker.getJobInfo(job).stageIds
-    ]
+    return [n for job in group_jobs(spark, group, action) for n in job]
 
 
 def test_extraction_task_cap_merges_partitions_without_shuffle(spark):
@@ -74,6 +65,50 @@ def test_extraction_task_cap_merges_partitions_without_shuffle(spark):
             lambda: out.write.format("noop").mode("overwrite").save(),
         )
         assert ran == [tasks], (cap, ran)
+
+
+def test_driver_side_tables_plan_as_local_scans(spark):
+    """Tables built on the driver from collected values — the heavy
+    hitters' top-k (and its empty form), the curated integrity terms and
+    the pipeline's lineage rows — plan as a ``LocalTableScan`` held in
+    the plan, never as ``Scan ExistingRDD``, whose collect starts one
+    Python task per partition."""
+    from barks_ocr_spark.operators import index, pipeline, sketches
+    from barks_ocr_spark.operators.cacheutil import unpersist_intermediates
+
+    docs = Q.load(spark, SF, "documents")
+    words = spark.sql("SELECT * FROM VALUES ('duck'), ('nugget') AS t(word)")
+    _manifest, lineage = pipeline.clean_corpus_with_lineage(
+        docs.filter(F.col("doc_id") % 97 != 0),
+        docs.filter(F.col("doc_id") % 97 == 0),
+        n=3,
+        budget_tokens=400,
+        min_words=30,
+        min_mean_word_len=4.0,
+    )
+    tables = {
+        "heavy_hitters": sketches.heavy_hitters(docs, k=5),
+        "heavy_hitters_empty": sketches.heavy_hitters(docs.limit(0), k=5),
+        "missing_terms": index.index_integrity_missing_terms(words, ["Duck", "zebra"]),
+        "lineage": lineage,
+    }
+    try:
+        for name, df in tables.items():
+            plan = _plan(df)
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
+        assert tables["heavy_hitters"].count() == 5
+        assert tables["heavy_hitters_empty"].count() == 0
+        assert [r["term"] for r in tables["missing_terms"].collect()] == ["zebra"]
+        # the column names, types and nullability of the list-built tables
+        for name, ddl in (
+            ("heavy_hitters", "word string, n_occurrences long"),
+            ("heavy_hitters_empty", "word string, n_occurrences long"),
+            ("missing_terms", "term string"),
+            ("lineage", "stage string, docs_in long, docs_out long"),
+        ):
+            assert tables[name].schema == DataType.fromDDL(ddl), name
+    finally:
+        unpersist_intermediates()
 
 
 def test_extract_spans_scan_prunes_columns(spark):

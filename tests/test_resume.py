@@ -110,6 +110,41 @@ def test_resume_uses_full_corpus_heading_set(spark, tmp_path):
     assert len(ckpt) == 1
 
 
+def test_noop_rerun_does_no_extraction_work(spark, tmp_path, monkeypatch):
+    """A rerun with nothing pending commits nothing and skips pass 1 and
+    the kernel: the snapshot manifests and the checkpoint table stay as
+    they were, and neither extraction step is ever called. Covers the
+    plain anti-join and the version-freshness (R2) resume."""
+    from pyspark.sql import functions as F
+
+    from barks_ocr_spark.operators import extraction
+
+    docs = spark.createDataFrame(
+        dg.gen_documents(40, seed=5), schema=DOCUMENTS_SPANS_SCHEMA
+    ).withColumn("version", F.lit(1).cast("long"))
+    jobs = {}
+    for version_col in (None, "version"):
+        job = ExtractionJob(
+            str(tmp_path / f"res-{version_col}"), str(tmp_path / f"ckpt-{version_col}")
+        )
+        assert job.run(spark, docs, version_col=version_col)["docs"] == 40
+        jobs[version_col] = job
+
+    def refuse(*_args, **_kwargs):
+        raise AssertionError("extraction work ran on a no-op rerun")
+
+    monkeypatch.setattr(extraction, "repeating_heading_set", refuse)
+    monkeypatch.setattr(extraction, "extract", refuse)
+    for version_col, job in jobs.items():
+        results, checkpoints = job.results.snapshots(), job.checkpoints.snapshots()
+        ckpt_rows = sorted(map(tuple, job.read_checkpoints(spark).collect()))
+        r = job.run(spark, docs, version_col=version_col)
+        assert r == {"snapshot_id": results[-1]["snapshot_id"], "docs": 0}
+        assert job.results.snapshots() == results
+        assert job.checkpoints.snapshots() == checkpoints
+        assert sorted(map(tuple, job.read_checkpoints(spark).collect())) == ckpt_rows
+
+
 def test_uncommitted_snapshot_invisible(spark, tmp_path):
     """Crash between data write and manifest commit → data invisible."""
     t = SnapshotTable(str(tmp_path / "t"))
