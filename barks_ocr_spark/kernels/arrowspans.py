@@ -690,10 +690,10 @@ def heading_candidates_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     `books/src/book_pages.py:295-321`): for every text span that is
     running-header shaped or ALL-CAPS (and not a Reprinted caption), emit
     the trimmed text and its page-number-stripped form, de-duplicated per
-    document. The global ``countDistinct(doc_id) >= 3`` aggregate stays
-    JVM-side (operators/extraction.py) — this kernel only shrinks the
-    full corpus to the tiny candidate set with RE2 passes, replacing the
-    Java-regex explode pass that dominated pass-1 wall time.
+    document. The global distinct-doc count ``>= 3`` aggregate stays
+    JVM-side (operators/extraction.py: a plain count(*), since the rows
+    are distinct per doc) — this kernel only shrinks the full corpus to
+    the tiny candidate set with RE2 passes.
 
     The batch carries (doc_id, texts:list<string>) — the operator
     projects the span structs down to their text strings JVM-side so the

@@ -91,9 +91,9 @@ def heading_variant_candidates(flat: pd.DataFrame) -> pd.DataFrame:
 def repeating_headings_from_flat(flat: pd.DataFrame) -> frozenset[str]:
     """Pandas-side repeated-heading set (golden path / small corpora).
 
-    On Spark this same aggregation runs as
-    ``groupBy(variant).agg(countDistinct(doc_id)) >= 3`` and the result is
-    broadcast (see operators/extraction.py).
+    On Spark this same aggregation runs as ``groupBy(variant).count() >= 3``
+    over candidates the Arrow kernel already makes distinct per doc, and
+    the result is broadcast (see operators/extraction.py).
     """
     pairs = heading_variant_candidates(flat)
     if len(pairs) == 0:

@@ -11,11 +11,11 @@ Scale notes (the whole point of each design):
   Jaccard is then exact via |A∩B| / (|A|+|B|-|A∩B|).
 - MinHash+LSH: k seeded xxhash64 min-hashes per doc, banded into b bands;
   candidates = docs sharing a (band, band_signature) bucket. The only
-  shuffle is on the band key. The k hashes are one `aggregate` over the
-  shingle array — no UDF.
-- SimHash: 64-bit signature from per-token xxhash64 bit votes; near-dups
-  share all but ≤ hamming_budget bits. Bucketing on rotated prefixes makes
-  it shuffle-bounded.
+  shuffle is on the band key. The k hashes are k min-aggregates over the
+  exploded shingle hashes — no UDF.
+- SimHash: 64-bit signature from per-token hash bit votes (a per-batch
+  numpy kernel, no shuffle); near-dups share all but ≤ hamming_budget
+  bits. Bucketing on signature segments makes it shuffle-bounded.
 - Embedding cosine: exact top-threshold pairs via block-nested join only
   within LSH buckets (see simsearch.py for the bucketing).
 """
@@ -72,47 +72,90 @@ def shingles_from_text(text: Column, n: int = 3) -> Column:
     return F.coalesce(grams, F.array().cast("array<string>"))
 
 
-def doc_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingles:array<string>) — one regex pass per row, no
-    cache barrier needed (the single-expression path has no
-    sub-expression for projection collapse to duplicate; callers persist
-    the RESULT when it feeds both sides of a self-join)."""
-    return docs.select(
-        "doc_id", shingles_from_text(F.col(text_col), n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-
-
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Single-expression shingle column (alias of shingles_from_text)."""
-    return shingles_from_text(text, n)
-
-
-def shingle_table(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingle, n_shingles) exploded inverted-index rows."""
-    with_sh = doc_shingles(docs, text_col, n)
-    return with_sh.select(
-        "doc_id",
-        F.size("shingles").alias("n_shingles"),
-        F.explode("shingles").alias("shingle"),
-    )
-
-
 DEFAULT_MAX_SHINGLE_FREQ = 1000
 
 
-def hot_shingles(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    max_shingle_freq: int = DEFAULT_MAX_SHINGLE_FREQ,
+def _text_sets(docs: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
+    """(members, utexts): the text-fingerprint collapse run BEFORE the
+    shingle/hash kernels of ngram_jaccard_pairs and
+    minhash_near_duplicates. ``members`` is (doc_id, _set); ``utexts``
+    is one row per DISTINCT text, (_set, _n_docs, _text).
+
+    The canonicalize + regex + in-array hashing pipeline is the dominant
+    stage of both operators (2.45 s of ~5 s for MinHash at sf1.0) and
+    would run once per DOC; grouping by a text fingerprint first (the
+    exact_duplicates shuffle shape — a corpus-keyed exchange a dedup
+    operator pays by definition) runs it once per DISTINCT text. Two
+    texts with identical shingle SETS form two internal "sets" and
+    surface as cross pairs at jaccard 1.0 — output unchanged, the set
+    partition is merely finer.
+
+    128-bit set identity (two independent xxhash64 passes in one
+    struct): a single 64-bit id carries a BIRTHDAY bound over the
+    corpus — at 10¹¹ distinct sets, (10¹¹)²/2⁶⁵ ≈ hundreds of silent
+    set-merges, each a false duplicate pair; two hashes push that to
+    2⁻¹²⁹. The struct rides groupBys, collect lists, joins and the a<b
+    ordering unchanged."""
+    fpr = docs.select("doc_id", F.col(text_col).alias("_text")).withColumn(
+        "_set",
+        F.struct(
+            F.xxhash64("_text").alias("_s1"),
+            F.xxhash64(F.lit(1), F.col("_text")).alias("_s2"),
+        ),
+    )
+    members = fpr.select("doc_id", "_set")
+    utexts = fpr.groupBy("_set").agg(
+        F.count("*").alias("_n_docs"), F.first("_text").alias("_text")
+    )
+    return members, utexts
+
+
+def _ordered_pairs(
+    lists: DataFrame, list_col: str, a: str, b: str, key=lambda c: c
 ) -> DataFrame:
-    """(shingle, freq) rows the default cap would drop — the audit view
-    for 'log what was dropped' (count() it before a production run)."""
-    sh = shingle_table(docs, text_col, n)
+    """(a, b) for every ordered pair key(a) < key(b) of the elements of
+    each row's ``list_col`` array — generated IN-TASK by a double
+    explode, so pair generation needs one exchange (the groupBy that
+    built the lists) instead of a self-join."""
     return (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("freq"))
-        .filter(F.col("freq") > max_shingle_freq)
+        lists.select(F.explode(list_col).alias(a), list_col)
+        .select(a, F.explode(list_col).alias(b))
+        .filter(key(F.col(a)) < key(F.col(b)))
+    )
+
+
+def _expand_pairs(
+    pairs: DataFrame, members: DataFrame, key: str, a: str, b: str, value: str
+) -> DataFrame:
+    """Re-expand (a, b, value) pairs of set/signature ids to
+    (doc_a, doc_b, value) doc pairs by joining the (doc_id, ``key``)
+    ``members`` back on both sides; doc_a < doc_b."""
+    ma = members.select(F.col("doc_id").alias("_da"), F.col(key).alias(a))
+    mb = members.select(F.col("doc_id").alias("_db"), F.col(key).alias(b))
+    return (
+        pairs.join(ma, a)
+        .join(mb, b)
+        .select(
+            F.least("_da", "_db").alias("doc_a"),
+            F.greatest("_da", "_db").alias("doc_b"),
+            value,
+        )
+    )
+
+
+_DEC = "decimal(38,0)"
+
+
+def _ceil_frac(num: int, den: int, x: Column) -> Column:
+    """⌈num·x/den⌉ for an integer column x ≥ 0 and positive integer
+    literals, exactly: 38-digit decimal products and an integral
+    ``div``. bigint products overflow once num·x passes 2⁶³ (a 16-digit
+    Fraction numerator times a ~1k-element set does), and Spark's ``/``
+    is a double division, not an exact one."""
+    return F.call_function(
+        "div",
+        F.lit(num).cast(_DEC) * x.cast(_DEC) + F.lit(den - 1).cast(_DEC),
+        F.lit(den).cast(_DEC),
     )
 
 
@@ -132,8 +175,7 @@ def ngram_jaccard_pairs(
     jaccard stays exact for pairs whose shared shingles are all under
     the cap (denominators use the PRE-cap shingle counts); pairs held
     together only by boilerplate shingles are deliberately dropped —
-    audit what the cap removes via :func:`hot_shingles`, or pass
-    ``max_shingle_freq=None`` for the exact-but-skew-prone plan.
+    pass ``max_shingle_freq=None`` for the exact-but-skew-prone plan.
 
     Plan shape (r7, guide §2.3/§2.4/§8). Three ideas compose:
 
@@ -177,34 +219,7 @@ def ngram_jaccard_pairs(
     prefix-filter step, byte-identical output (oracle-checked at
     sf0.001, sf0.01, sf0.1, sf1.0).
     """
-    # r7b: collapse by TEXT fingerprint BEFORE the shingle/hash kernel
-    # (same move as minhash_near_duplicates): the canonicalize + regex +
-    # in-array hashing pipeline was the dominant stage and ran once per
-    # DOC; grouping by a 128-bit text fingerprint first (the
-    # exact_duplicates shuffle shape — a corpus-keyed exchange a dedup
-    # operator pays by definition) runs it once per DISTINCT text, and
-    # the old doc-level persisted table + set-keyed first(_harr)
-    # aggregate both disappear. Two texts with identical shingle SETS
-    # now form two internal "sets" and surface as cross pairs at
-    # jaccard 1.0 — output unchanged, the set partition is merely finer.
-    #
-    # 128-bit set identity (two independent xxhash64 passes in one
-    # struct): a single 64-bit id carries a BIRTHDAY bound over the
-    # corpus — at 10¹¹ distinct sets, (10¹¹)²/2⁶⁵ ≈ hundreds of silent
-    # set-merges, each a false duplicate pair — unlike the per-pair
-    # probe/posting collisions discussed above, which stay vanishing.
-    # The struct rides groupBys, joins, and the a<b ordering unchanged.
-    fpr = docs.select("doc_id", F.col(text_col).alias("_text")).withColumn(
-        "_set",
-        F.struct(
-            F.xxhash64("_text").alias("_s1"),
-            F.xxhash64(F.lit(1), F.col("_text")).alias("_s2"),
-        ),
-    )
-    members = fpr.select("doc_id", "_set")
-    utexts = fpr.groupBy("_set").agg(
-        F.count("*").alias("_n_docs"), F.first("_text").alias("_text")
-    )
+    members, utexts = _text_sets(docs, text_col)
     sh = shingles_from_text(F.col("_text"), n)
     harr = F.sort_array(F.transform(sh, lambda x: F.xxhash64(x)))
     # one row per DISTINCT text, with its doc multiplicity and the
@@ -314,16 +329,14 @@ def ngram_jaccard_pairs(
     # pair-count aggregate over ~all-distinct keys that was half this
     # operator is replaced by a 5.5× smaller distinct + an
     # output-proportional array intersect. ⌈t·n⌉ is computed in exact
-    # integer arithmetic from Fraction(threshold) — a float ceil that
-    # lands one too high silently shortens the prefix and can MISS
-    # pairs at any corpus size.
+    # integer arithmetic from Fraction(threshold) (_ceil_frac) — a
+    # float ceil that lands one too high silently shortens the prefix
+    # and can MISS pairs at any corpus size.
     from fractions import Fraction
 
     fr = Fraction(str(threshold))
     ta, tb = fr.numerator, fr.denominator
-    c_req = F.floor(
-        (F.lit(ta) * F.col("n_shingles") + F.lit(tb - 1)) / F.lit(tb)
-    ).cast("int")
+    c_req = _ceil_frac(ta, tb, F.col("n_shingles")).cast("int")
     plen = F.greatest(F.col("_m") - c_req + 1, F.lit(0))
     # The bitmap prefilter runs IN-TASK during pair generation: each
     # posting element carries its set's (id, n, collision count, 16-word
@@ -373,13 +386,9 @@ def ngram_jaccard_pairs(
     ub = F.least(x["_coll"], y["_coll"])
     for w in range(16):
         ub = ub + F.bit_count(x[f"_b{w}"].bitwiseAND(y[f"_b{w}"]))
-    c_min = F.floor(
-        (F.lit(ta) * (n_x + n_y) + F.lit(ta + tb - 1)) / F.lit(ta + tb)
-    ).cast("int")
+    c_min = _ceil_frac(ta, ta + tb, n_x.cast(_DEC) + n_y.cast(_DEC)).cast("int")
     surv = (
-        postings.select(F.explode("_ds").alias("_x"), "_ds")
-        .select("_x", F.explode("_ds").alias("_y"))
-        .filter(x["_set"] < y["_set"])
+        _ordered_pairs(postings, "_ds", "_x", "_y", key=lambda c: c["_set"])
         # prune: jaccard ≤ min/max, so min/max < threshold can never pass
         .filter(
             F.least(n_x, n_y) / F.greatest(n_x, n_y) >= F.lit(threshold)
@@ -406,63 +415,34 @@ def ngram_jaccard_pairs(
         .select("_sa", "_sb", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    ma = members.select(F.col("doc_id").alias("_da"), F.col("_set").alias("_sa"))
-    mb = members.select(F.col("doc_id").alias("_db"), F.col("_set").alias("_sb"))
-    cross = (
-        set_pairs.join(ma, "_sa")
-        .join(mb, "_sb")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    cross = _expand_pairs(set_pairs, members, "_set", "_sa", "_sb", "jaccard")
     return cross.unionAll(same)
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", n: int = 3, k: int = 64
-) -> DataFrame:
-    """(doc_id, sig: array<bigint>[k]) MinHash signatures, all JVM-side.
+def _minhash_sigs_from_h1h2(hashed: DataFrame, k: int) -> DataFrame:
+    """(doc_id, sig: array<bigint>[k]) MinHash signatures from
+    pre-hashed (doc_id, _h1, _h2) rows, one row per shingle.
 
-    Shape: explode shingles once, hash each shingle with k seeds, then
-    ``groupBy(doc_id).agg(min(h_0), …, min(h_{k-1}))`` — partial (map-side)
-    aggregation makes the shuffle k longs per doc. The tempting
-    alternative — nested ``transform(seeds, array_min(transform(...)))``
-    over a shingles column — is catastrophically slower: Catalyst's
-    projection collapse inlines the whole canonicalize/split/distinct
-    pipeline into every seed lambda (measured ~20× slower on 1k docs).
-    """
-    return minhash_signatures_from_shingles(shingle_table(docs, text_col, n), k)
-
-
-def minhash_signatures_from_shingles(sh: DataFrame, k: int = 64) -> DataFrame:
-    """Signatures from an existing (doc_id, shingle) table — lets callers
-    share one shingle pass across signature and verification stages.
+    Shape: ``groupBy(doc_id).agg(min(h_0), …, min(h_{k-1}))`` over the
+    exploded shingle hashes — partial (map-side) aggregation makes the
+    shuffle k longs per doc. The tempting alternative — nested
+    ``transform(seeds, array_min(transform(...)))`` over a shingles
+    column — is catastrophically slower: Catalyst's projection collapse
+    inlines the whole canonicalize/split/distinct pipeline into every
+    seed lambda (measured ~20× slower on 1k docs).
 
     Hash family: two xxhash64 seeds combined per slot as
-    h_i = h1 XOR rotl(h2, i) — 2 string hashes per shingle row instead
-    of k (the double-hashing idea, with an XOR-rotate combine that stays
+    h_i = h1 XOR rotl(h2, i) — 2 string hashes per shingle instead of k
+    (the double-hashing idea, with an XOR-rotate combine that stays
     overflow-free under ANSI arithmetic). Signature quality is
     equivalent for LSH banding, and the registry oracle checks the
     *verified* output pairs (exact Jaccard), so the hash family is an
-    internal choice, not part of the public contract.
-
-    The two hashes are MATERIALIZED as columns through a projection
-    before the aggregate: whole-stage codegen does NOT subexpression-
-    eliminate across aggregate-function children, so inlining h1/h2 into
-    the k min() exprs re-hashes the shingle string 2k times per row
-    (measured 4.1s vs 1.6s at sf0.1 for the signature stage)."""
-    hashed = sh.select(
-        "doc_id",
-        F.xxhash64(F.col("shingle")).alias("_h1"),
-        F.xxhash64(F.col("shingle"), F.lit(1)).alias("_h2"),
-    )
-    return _minhash_sigs_from_h1h2(hashed, k)
-
-
-def _minhash_sigs_from_h1h2(hashed: DataFrame, k: int) -> DataFrame:
-    """Signature aggregate over pre-hashed (doc_id, _h1, _h2) rows."""
+    internal choice, not part of the public contract. The two hashes
+    arrive as columns, not inlined expressions: whole-stage codegen
+    does NOT subexpression-eliminate across aggregate-function
+    children, so inlining h1/h2 into the k min() exprs re-hashes the
+    shingle string 2k times per row (measured 4.1s vs 1.6s at sf0.1 for
+    the signature stage)."""
     h1, h2 = F.col("_h1"), F.col("_h2")
 
     def rotl(col, i):  # Java shifts are mod 64, so i=0 degenerates to col
@@ -524,9 +504,7 @@ def minhash_lsh_candidates(
         .filter(F.size("_ids") > 1)
     )
     return (
-        grouped.select(F.explode("_ids").alias("doc_a"), "_ids")
-        .select("doc_a", F.explode("_ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _ordered_pairs(grouped, "_ids", "doc_a", "doc_b")
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -567,34 +545,7 @@ def minhash_near_duplicates(
     they save. Exploding the in-array-built struct-of-hashes skips the
     per-row UTF8 copies of exploding shingle strings — the same
     measured 4.7× stream win as decontam's gram explode.)"""
-    # r7b: collapse by TEXT fingerprint BEFORE the shingle/hash kernel —
-    # the shingle regex + double-hash transform + fat-struct-array
-    # persist was the dominant stage (2.45 s of ~5 s at sf1.0), and on
-    # a duplicated corpus it ran once per DOC; the groupBy(first(text))
-    # collapse runs it once per DISTINCT text (the exact_duplicates
-    # shuffle shape — a corpus-keyed exchange a dedup operator pays by
-    # definition), and the separate set-keyed usets aggregate of struct
-    # arrays disappears. Two texts with identical shingle SETS now form
-    # two "sets" and are found as cross pairs at jaccard 1.0 — the
-    # output is unchanged, only the internal set partition is finer.
-    #
-    # 128-bit set identity struct — same birthday-bound reasoning as
-    # ngram_jaccard_pairs: a 64-bit id silently merges ~(sets)²/2⁶⁵
-    # distinct sets corpus-wide; two independent hashes push that to
-    # 2⁻¹²⁹. The struct flows through the signature groupBy, band
-    # collect lists, ordered pair comparison, and expansion joins
-    # unchanged.
-    fpr = docs.select("doc_id", F.col(text_col).alias("_text")).withColumn(
-        "_set",
-        F.struct(
-            F.xxhash64("_text").alias("_s1"),
-            F.xxhash64(F.lit(1), F.col("_text")).alias("_s2"),
-        ),
-    )
-    members = fpr.select("doc_id", "_set")
-    utexts = fpr.groupBy("_set").agg(
-        F.count("*").alias("_n_docs"), F.first("_text").alias("_text")
-    )
+    members, utexts = _text_sets(docs, text_col)
     sh = shingles_from_text(F.col("_text"), n)
     ha = F.sort_array(
         F.transform(
@@ -627,17 +578,7 @@ def minhash_near_duplicates(
     set_pairs = pairs.select("_sa", "_sb", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-    ma = members.select(F.col("doc_id").alias("_da"), F.col("_set").alias("_sa"))
-    mb = members.select(F.col("doc_id").alias("_db"), F.col("_set").alias("_sb"))
-    cross = (
-        set_pairs.join(ma, "_sa")
-        .join(mb, "_sb")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    cross = _expand_pairs(set_pairs, members, "_set", "_sa", "_sb", "jaccard")
     # same-set doc pairs: identical sets collide in every band and
     # verify at exactly 1.0 — emit directly (threshold ≤ 1 keeps them,
     # matching the doc-level plan's behavior)
@@ -648,88 +589,36 @@ def minhash_near_duplicates(
         .agg(F.collect_list("doc_id").alias("_ids"))
     )
     same = (
-        sig_groups.select(F.explode("_ids").alias("doc_a"), "_ids")
-        .select("doc_a", F.explode("_ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.lit(1.0).alias("jaccard"),
-        )
+        _ordered_pairs(sig_groups, "_ids", "doc_a", "doc_b")
+        .select("doc_a", "doc_b", F.lit(1.0).alias("jaccard"))
         .filter(F.lit(1.0) >= F.lit(threshold))
     )
     return cross.unionAll(same)
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per doc from word-level xxhash64 bit votes.
-
-    sig bit j = 1 iff sum over tokens of (bit j of xxhash64(token) ? +1
-    : -1) > 0. Expressed as nested `transform`/`aggregate` — JVM-side.
-    """
-    # Same explode-then-aggregate shape as minhash_signatures (avoids
-    # lambda-inlined recomputation of the tokenize pipeline): one hash per
-    # token row, 64 per-bit vote sums via partial aggregation.
-    words = F.split(canonical_text(F.col(text_col)), " ")
-    tok = (
-        docs.select("doc_id", F.explode(words).alias("word"))
-        .filter(F.col("word") != "")
-        # materialize the hash once per token row: codegen does not CSE
-        # across aggregate children, so an inlined xxhash64(word) would
-        # re-hash the string in every one of the 64 vote sums (same
-        # measured trap as minhash_signatures_from_shingles)
-        .select("doc_id", F.xxhash64(F.col("word")).alias("_h"))
-        # pre-aggregate token multiplicity with ONE counter, then run
-        # the 64 vote sums weighted by count over the collapsed table:
-        # Σ_tokens f(h) ≡ Σ_h cnt·f(h) exactly (pure regrouping), and
-        # the wide aggregate sees |distinct (doc, h)| rows instead of
-        # |tokens| (signature stage measured 10.2s → 4.5s cold at sf0.1;
-        # the remainder is the canonicalize/explode scan, not the votes)
-        .groupBy("doc_id", "_h")
-        .agg(F.count("*").alias("_c"))
-    )
-    h, c = F.col("_h"), F.col("_c")
-    # Bit masks as literals (shiftleft needs a constant shift); bit 63 is
-    # the long sign bit, hence the negative literal.
-    masks = [1 << j for j in range(63)] + [-(1 << 63)]
-    votes = [
-        F.sum(F.when(h.bitwiseAND(F.lit(m).cast("long")) != 0, c).otherwise(-c)).alias(
-            f"v{j}"
-        )
-        for j, m in enumerate(masks)
-    ]
-    agg = tok.groupBy("doc_id").agg(*votes)
-    sig = None
-    for j, m in enumerate(masks):
-        bit = F.when(F.col(f"v{j}") > 0, F.lit(m).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = bit if sig is None else sig + bit
-    return agg.select("doc_id", sig.alias("simhash"))
-
-
 def simhash_signatures_kernel(
     docs: DataFrame, text_col: str = "text"
 ) -> DataFrame:
-    """Zero-shuffle SimHash signatures: the per-batch numpy kernel form
-    of :func:`simhash_signatures`. A signature is a pure function of one
-    document, so the relational form's two exchanges (token collapse +
-    64-vote aggregate) pay a corpus-proportional shuffle for a per-doc
+    """(doc_id, simhash) 64-bit SimHash signatures from token bit votes:
+    sig bit j = 1 iff Σ over tokens of (bit j of h(token) ? +1 : −1) > 0.
+
+    Zero shuffle: a signature is a pure function of one document, so a
+    relational form (explode tokens, then a token-collapse and a 64-vote
+    aggregate) pays two corpus-proportional exchanges for a per-doc
     computation — the same critique, and the same fix, as
     repetition_scores. Here each Arrow batch canonicalizes + tokenizes
-    in Python, hashes every token occurrence in one vectorized C call
+    in Python, hashes every token in one vectorized C call
     (``pandas.util.hash_array``, SipHash with a fixed key — process- and
     run-stable), and folds the ±1 bit votes per doc in numpy.
 
-    Same contract as the relational form: docs with zero tokens after
-    canonicalization yield NO signature row; identical text ⇒ identical
-    signature; near text ⇒ near signature. Signature VALUES differ from
-    the relational form (xxhash64 vs SipHash token hashing — documented,
-    both deterministic); everything downstream is hash-agnostic.
+    Contract: docs with zero tokens after canonicalization (empty,
+    whitespace-only, null) yield NO signature row; identical text ⇒
+    identical signature; near text ⇒ near signature. The token hash is
+    internal — everything downstream is hash-agnostic.
 
-    Measured at sf0.1 / local[32], best-of-2: signatures 1.94 s
-    (relational) → 0.50 s (kernel); full near-dup pair query 3.54 s →
-    2.00 s. The gap is the eliminated token-collapse + 64-vote
+    Measured at sf0.1 / local[32], best-of-2, against the xxhash64
+    explode + 64-vote aggregate form: signatures 1.94 s → 0.50 s; full
+    near-dup pair query 3.54 s → 2.00 s. The gap is the eliminated
     exchanges, so it grows with corpus size.
     """
     kernel = F.pandas_udf(_simhash_batch, "long")
@@ -747,10 +636,11 @@ def _simhash_batch(texts):  # type: (pd.Series) -> pd.Series
     import pandas as pd
 
     # re.ASCII: Python's Unicode \s also matches NBSP/U+2028/\x85, which
-    # the relational form's Java regex (canonical_text) does NOT — those
-    # must be STRIPPED (non-alnum), not treated as token separators, or
-    # fingerprint-equal docs with exotic whitespace tokenize differently
-    # per form and fail to pair at hamming 0.
+    # the Java regex of canonical_text does NOT — those must be STRIPPED
+    # (non-alnum), not treated as token separators, so tokens match the
+    # canonical_text tokenization every other dedup operator uses and
+    # fingerprint-equal docs with exotic whitespace still pair at
+    # hamming 0.
     #
     # Fully vectorized (guide §4.2 — hand whole batches to native code):
     # canonicalization via pandas C string kernels, token hashing in one
@@ -872,14 +762,12 @@ def hot_simhash_buckets(
     text_col: str = "text",
     max_hamming: int = 3,
     max_bucket_size: int = 1000,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """(seg, val, n_sigs) segment buckets holding more DISTINCT
     signatures than ``max_bucket_size`` — the audit view for
     simhash_near_duplicates's optional bucket cap ('log what was
     dropped': count() this before capping a production run)."""
-    sig_fn = simhash_signatures_kernel if use_kernel else simhash_signatures
-    usig = sig_fn(docs, text_col).select("simhash").distinct()
+    usig = simhash_signatures_kernel(docs, text_col).select("simhash").distinct()
     return (
         simhash_segment_table(usig, max_hamming)
         .groupBy("seg", "val")
@@ -892,7 +780,6 @@ def simhash_near_duplicates(
     docs: DataFrame,
     text_col: str = "text",
     max_hamming: int = 3,
-    use_kernel: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming distance ≤ max_hamming.
@@ -921,12 +808,7 @@ def simhash_near_duplicates(
     near-colliding signatures, not mere duplication); audit what a cap
     would drop via :func:`hot_simhash_buckets`. Capping loses only pairs
     whose EVERY agreeing segment is hot.
-
-    ``use_kernel`` picks the zero-shuffle signature kernel (default);
-    pass False for the relational xxhash64 form (signature values
-    differ between the two, pair semantics do not).
     """
-    sig_fn = simhash_signatures_kernel if use_kernel else simhash_signatures
     # ``sigs`` is filled by the first action that reads it. The eager
     # count of ``exploded`` stays: with pyspark 4.1.2 at local[4] on the
     # 800-doc benchmark hygiene corpus (two traced runs), dropping the
@@ -934,7 +816,7 @@ def simhash_near_duplicates(
     # time (build + pairs 1.42/1.40 s before, 1.19/1.42 s after), while
     # dropping the ``exploded`` count left it mixed (1.14/1.54 s), the
     # pairs action slower in both runs (0.41/0.51 s, from 0.35/0.31 s)
-    sigs = _persist(sig_fn(docs, text_col))
+    sigs = _persist(simhash_signatures_kernel(docs, text_col))
     usig = sigs.select("simhash").distinct()
     exploded = _persist(simhash_segment_table(usig, max_hamming))
     exploded.count()
@@ -957,17 +839,7 @@ def simhash_near_duplicates(
         .distinct()
         .select("sig_a", "sig_b", ham.alias("hamming"))
     )
-    mem_a = sigs.select(F.col("doc_id").alias("_da"), F.col("simhash").alias("sig_a"))
-    mem_b = sigs.select(F.col("doc_id").alias("_db"), F.col("simhash").alias("sig_b"))
-    cross = (
-        sig_pairs.join(mem_a, "sig_a")
-        .join(mem_b, "sig_b")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "hamming",
-        )
-    )
+    cross = _expand_pairs(sig_pairs, sigs, "simhash", "sig_a", "sig_b", "hamming")
     # same-signature pairs from ONE exchange (groupBy/collect postings
     # + in-task ordered pair explode — r7, the ngram_jaccard_pairs
     # shape) instead of a signature-keyed self-join that exchanged the
@@ -977,11 +849,8 @@ def simhash_near_duplicates(
         .agg(F.collect_list("doc_id").alias("_ids"))
         .filter(F.size("_ids") > 1)
     )
-    same = (
-        sig_groups.select(F.explode("_ids").alias("doc_a"), "_ids")
-        .select("doc_a", F.explode("_ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(0).alias("hamming"))
+    same = _ordered_pairs(sig_groups, "_ids", "doc_a", "doc_b").select(
+        "doc_a", "doc_b", F.lit(0).alias("hamming")
     )
     return cross.unionAll(same)
 

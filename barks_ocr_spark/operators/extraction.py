@@ -2,8 +2,8 @@
 
 Physical shape (designed for a 10^12-doc table):
 
-  Pass 1 (tiny shuffle): heading candidates → groupBy(variant)
-      .agg(countDistinct(doc_id)) → filter ≥3. Candidates are rare
+  Pass 1 (tiny shuffle): heading candidates, distinct per doc →
+      groupBy(variant).agg(count(*)) → filter ≥3. Candidates are rare
       (headers/page-number-shaped spans only) and short strings, so this
       aggregate is a few MB at any corpus size; the surviving set is
       collected and broadcast (`books/src/book_pages.py:295-321`'s
@@ -21,7 +21,7 @@ Physical shape (designed for a 10^12-doc table):
       which job.py uses); giant docs clustered in one parquet row group
       still share one task.
 
-All string work is vectorized pandas inside the batch — no per-row
+All string work is vectorized Arrow/RE2 inside the batch — no per-row
 Python UDFs anywhere.
 """
 
@@ -33,73 +33,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from barks_ocr_spark.kernels import spans as span_kernel
 from barks_ocr_spark.kernels import textnorm as tn
 from barks_ocr_spark.schemas import DOCUMENTS_SPANS_SCHEMA
 
-_CANDIDATE_SCHEMA = "doc_id string, variant string"
-
-# JVM translations of the kernels/textnorm boilerplate predicates —
-# anchored Java-regex forms of the same patterns (parity guarded by the
-# Spark-vs-golden e2e tests, which compute the repeating set through the
-# pandas kernel and require byte-identical final spans).
-_PAGE_NUM_TOKEN = r"(?:[ivxlcdmIVXLCDM]{1,8}|\d{1,3})"
-_HEADER_SHAPE_RE = rf"^(?:{_PAGE_NUM_TOKEN}\s+\S.*|\S.*\s+{_PAGE_NUM_TOKEN})$"
-
-
-def heading_candidates(docs: DataFrame) -> DataFrame:
-    """(doc_id, variant) candidate pairs — pure JVM expressions.
-
-    This pass touches every span of every document, so it must scale like
-    a scan: explode + rlike keeps it inside whole-stage codegen with no
-    Python workers (the earlier mapInPandas variant pinned ~13s of
-    Arrow+pandas flatten cost per run that did not parallelize away).
-    """
-    # regexp strip, not F.trim: trim removes ASCII spaces only, while the
-    # golden pandas kernel uses .str.strip() (all whitespace) — tab/newline
-    # edge whitespace must produce the same variants in both paths
-    t = F.regexp_replace(F.col("s.text"), r"^\s+|\s+$", "")
-    header_shape = t.rlike(_HEADER_SHAPE_RE)
-    all_caps = (
-        t.rlike("[A-Za-z]") & ~t.rlike("[a-z]")
-    )
-    candidate = (
-        (F.length(t) > 0)
-        & (F.length(t) <= tn.MAX_RUNNING_HEADER_LEN)
-        & (header_shape | all_caps)
-        & ~t.startswith(tn.REPRINTED_PREFIX)
-        & t.rlike("[A-Za-z]")
-    )
-    stripped = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(t, rf"^{_PAGE_NUM_TOKEN}\s+", ""),
-            rf"\s+{_PAGE_NUM_TOKEN}$",
-            "",
-        ),
-        r"^\s+|\s+$",
-        "",
-    )
-    return (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .filter((F.col("s.kind") == "text") & candidate)
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.array(t, stripped))).alias("variant"),
-        )
-        .filter(F.length("variant") > 0)
-        .dropDuplicates(["doc_id", "variant"])
-    )
-
 
 def heading_candidates_arrow(docs: DataFrame) -> DataFrame:
-    """(doc_id, variant) candidates via the Arrow kernel (fast path).
+    """(doc_id, variant) heading candidates, distinct per document, from
+    the Arrow kernel (kernels/arrowspans.heading_candidates_batch).
 
-    Same output contract as :func:`heading_candidates` (parity pinned by
-    tests/test_arrow_kernel.py) but the per-span regex work runs as RE2
-    passes inside mapInArrow — measured ~2× the JVM-regex pass-1
-    throughput with better core scaling, and it shares the exact
-    pandas-`str.strip` whitespace semantics of the golden kernel instead
-    of re-deriving them in Java regex.
+    The per-span regex work runs as RE2 passes inside mapInArrow, with
+    the pandas-`str.strip` whitespace and Unicode-digit semantics of the
+    golden kernel (parity pinned by tests/test_arrow_kernel.py).
     """
     import pyarrow as pa
 
@@ -121,34 +65,26 @@ def heading_candidates_arrow(docs: DataFrame) -> DataFrame:
     )
 
 
-def repeating_headings_counted(docs: DataFrame, kernel: str = "arrow") -> DataFrame:
+def repeating_headings_counted(docs: DataFrame) -> DataFrame:
     """variants appearing on ≥3 distinct docs, with their distinct-doc
     counts (A7). Returns DataFrame[variant, n_docs]."""
-    cand = (
-        heading_candidates_arrow(docs)
-        if kernel == "arrow"
-        else heading_candidates(docs)
-    )
-    # The arrow kernel emits (doc_id, variant) pairs ALREADY distinct per
+    # The kernel emits (doc_id, variant) pairs ALREADY distinct per
     # document (batch-local dedup + one row per doc per batch), so the
     # distinct-doc count is a plain count(*) — no distinct-expand, the
     # aggregate shuffles 33k partial counts instead of re-deduplicating
     # 3.8M pairs (measured 9.3s → 7.4s for the pass-1 aggregate at 32
-    # cores on 2.4M docs). The relational path gives no such invariant
-    # and keeps the exact countDistinct.
-    n_docs = (
-        F.count("*") if kernel == "arrow" else F.countDistinct("doc_id")
-    )
+    # cores on 2.4M docs).
     return (
-        cand.groupBy("variant")
-        .agg(n_docs.alias("n_docs"))
+        heading_candidates_arrow(docs)
+        .groupBy("variant")
+        .agg(F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") >= tn.RUNNING_HEADER_REPEAT_THRESHOLD)
     )
 
 
-def repeating_headings(docs: DataFrame, kernel: str = "arrow") -> DataFrame:
+def repeating_headings(docs: DataFrame) -> DataFrame:
     """variants appearing on ≥3 distinct docs (A7). Returns DataFrame[variant]."""
-    return repeating_headings_counted(docs, kernel=kernel).select("variant")
+    return repeating_headings_counted(docs).select("variant")
 
 
 # Driver-memory bound on the broadcast heading set. Genuine running
@@ -160,7 +96,6 @@ DEFAULT_MAX_REPEATING_VARIANTS = 100_000
 
 def repeating_heading_set(
     docs: DataFrame,
-    kernel: str = "arrow",
     max_variants: int = DEFAULT_MAX_REPEATING_VARIANTS,
 ) -> frozenset[str]:
     """Pass-1 result as the driver-side broadcast set, with a BOUNDED
@@ -172,7 +107,7 @@ def repeating_heading_set(
     never holds more than the cap. Truncation is logged: silent caps
     read as full coverage when they aren't."""
     rows = (
-        repeating_headings_counted(docs, kernel=kernel)
+        repeating_headings_counted(docs)
         .orderBy(F.desc("n_docs"), "variant")
         .limit(max_variants + 1)
         .collect()
@@ -220,20 +155,18 @@ def extract(
     page_scans: DataFrame | None = None,
     repeating: frozenset[str] | None = None,
     num_partitions: int | None = None,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Full extraction: returns (doc_id, spans) with the output contract
     of kernels/spans.py (span-sequence equality key: kind, text,
     media_ref, order).
 
-    ``kernel="arrow"`` (default) runs the pass-2 kernel via mapInArrow on
-    raw RecordBatches (kernels/arrowspans.py): no Python-object span
-    materialization, RE2 string passes on contiguous buffers — ~4×
-    faster per core than the pandas kernel and far lighter on memory
+    Pass 2 runs via mapInArrow on raw RecordBatches
+    (kernels/arrowspans.py): no Python-object span materialization, RE2
+    string passes on contiguous buffers — ~4× faster per core than the
+    golden pandas kernel (kernels/spans.py) and far lighter on memory
     bandwidth, which is what multi-core scaling is bound by.
-    ``kernel="pandas"`` keeps the golden pandas path (kernels/spans.py);
-    byte-identical output is pinned by tests/test_arrow_kernel.py and
-    the e2e golden tests.
+    Byte-identical output to the pandas kernel is pinned by
+    tests/test_arrow_kernel.py and the e2e golden tests.
 
     The kernel runs on ``docs``' own partitions: pass 2 adds no shuffle.
     ``num_partitions`` caps the kernel at that many tasks, merging
@@ -243,10 +176,14 @@ def extract(
     (its scan, or the anti-join of ``ExtractionJob.run``). Output is
     identical at any partitioning.
     """
+    import pyarrow as pa
+
+    from barks_ocr_spark.kernels import arrowspans
+
     spark = docs.sparkSession
     if repeating is None:
         # bounded deterministic collect — see repeating_heading_set
-        repeating = repeating_heading_set(docs, kernel=kernel)
+        repeating = repeating_heading_set(docs)
     bc = spark.sparkContext.broadcast(repeating)
 
     if page_scans is not None:
@@ -254,27 +191,12 @@ def extract(
     if num_partitions is not None:
         docs = docs.coalesce(num_partitions)
 
-    narrow = docs.select("doc_id", "spans")
-    if kernel == "arrow":
-        import pyarrow as pa
-
-        from barks_ocr_spark.kernels import arrowspans
-
-        def _gen_arrow(
-            batches: Iterator[pa.RecordBatch],
-        ) -> Iterator[pa.RecordBatch]:
-            rep = bc.value
-            for batch in batches:
-                yield arrowspans.extract_batch(batch, rep)
-
-        return narrow.mapInArrow(_gen_arrow, DOCUMENTS_SPANS_SCHEMA)
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         rep = bc.value
         for batch in batches:
-            yield span_kernel.extract_documents(batch, rep)
+            yield arrowspans.extract_batch(batch, rep)
 
-    return narrow.mapInPandas(_gen, DOCUMENTS_SPANS_SCHEMA)
+    return docs.select("doc_id", "spans").mapInArrow(_gen, DOCUMENTS_SPANS_SCHEMA)
 
 
 def extraction_metrics(result: DataFrame) -> DataFrame:

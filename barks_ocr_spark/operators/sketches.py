@@ -71,22 +71,17 @@ def kmv_distinct(
     group_col: str,
     value_col: str,
     k: int = 16,
-    pre_trim: bool = True,
 ) -> DataFrame:
     """(group, est_distinct): KMV distinct-count estimate of
     ``value_col`` per group, deterministic across engines/runs/
     partitionings.
 
-    ``pre_trim`` inserts a narrow per-batch k-smallest filter before
-    the global shuffle (see _pre_trim_k_smallest) — identical result,
-    bounded shuffle. Disable for tiny inputs where the extra Arrow
-    stage costs more than it saves."""
+    A narrow per-batch k-smallest filter runs before the global shuffle
+    (see _pre_trim_k_smallest) — identical result, bounded shuffle."""
     hashes = df.select(
         F.col(group_col), _hash32(F.col(value_col)).alias("_h")
     )
-    if pre_trim:
-        hashes = _pre_trim_k_smallest(hashes, group_col, k)
-    hashes = hashes.distinct()
+    hashes = _pre_trim_k_smallest(hashes, group_col, k).distinct()
     w = Window.partitionBy(group_col).orderBy("_h")
     ranked = hashes.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") <= k

@@ -107,19 +107,20 @@ def repetition_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     than the token count.)
 
     Plan shape: scan → pandas_udf projection, ZERO shuffle. Every
-    signal is a pure function of one document, so the relational form
-    (explode + three keyed aggregates — kept below as
-    ``repetition_scores_relational``) paid a corpus-sized exchange of
-    per-token gram text for a per-document computation. Here each Arrow
-    batch of documents is scored by a per-doc Counter inside the batch
-    (per-doc loops are inherent to per-doc text stats, same boundary as
-    media.image_metadata); at 100 TB this is a scan-only job.
-    Tokenization, zero-denominator, and rounding semantics are
-    bit-identical to the relational form (pinned by
-    test_hygiene_ops.test_repetition_kernel_matches_relational).
+    signal is a pure function of one document, so a relational form
+    (explode + three keyed aggregates) pays a corpus-sized exchange of
+    per-token gram text for a per-document computation — measured
+    1.90 s relational vs 0.28 s kernel at sf0.1 / local[32], a gap that
+    widens with corpus size. Here each Arrow batch of documents is
+    scored by one vectorized numpy pass (see _repetition_scores_batch);
+    at 100 TB this is a scan-only job. Tokenization (lower, trim
+    spaces, split on ``\\s+``), zero-denominator and HALF_UP rounding
+    semantics are those of the Spark SQL expressions; the relational
+    form is kept in tests/test_hygiene_ops.py as the differential
+    oracle.
 
-    Null-text docs produce no output row (matching the relational
-    form, where a null text explodes to zero gram rows)."""
+    Null-text docs produce no output row (as in the relational form,
+    where a null text explodes to zero gram rows)."""
     kernel = F.pandas_udf(
         _repetition_scores_batch,
         "top_unigram_frac double, top_bigram_frac double,"
@@ -146,10 +147,10 @@ def _repetition_scores_batch(texts: pd.Series) -> pd.DataFrame:
     reduceat; n-gram identity uses code pairs, which equals string
     identity because tokens cannot contain the ' ' joiner (it is split
     away). Measured 3.5 s → 1.5 s single-core for a 50k-doc corpus
-    pass, byte-identical output (pinned by
+    pass, byte-identical output (pinned against the loop form, kept in
+    tests/test_hygiene_ops.py, by
     test_repetition_kernel_vectorized_matches_loop, incl. the
-    empty/whitespace/single-token edges). The loop form below stays as
-    the differential reference."""
+    empty/whitespace/single-token edges)."""
     import re
 
     import numpy as np
@@ -240,119 +241,6 @@ def _round6(num: int, den: int) -> float:
     if den == 0:
         return 0.0
     return float(Decimal(repr(num / den)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
-
-def _repetition_scores_batch_loop(texts: pd.Series) -> pd.DataFrame:
-    """The original Counter-per-doc form — kept ONLY as the differential
-    reference for the vectorized kernel above (not used in any query
-    path)."""
-    import re
-    from collections import Counter
-
-    ws_re = re.compile(r"\s+", re.ASCII)
-    round6 = _round6
-
-    out = {"top_unigram_frac": [], "top_bigram_frac": [], "dup_trigram_frac": []}
-    for t in texts:
-        ws = ws_re.split(str(t).lower().strip(" "))
-        uni = Counter(ws)
-        bi = Counter(
-            f"{a} {b}" for a, b in zip(ws, ws[1:])
-        )
-        tri = Counter(
-            f"{a} {b} {c}" for a, b, c in zip(ws, ws[1:], ws[2:])
-        )
-        out["top_unigram_frac"].append(round6(max(uni.values(), default=0), len(ws)))
-        out["top_bigram_frac"].append(
-            round6(max(bi.values(), default=0), max(len(ws) - 1, 0))
-        )
-        out["dup_trigram_frac"].append(
-            round6(
-                sum(c for c in tri.values() if c > 1), max(len(ws) - 2, 0)
-            )
-        )
-    return pd.DataFrame(out)
-
-
-def repetition_scores_relational(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """The relational formulation of ``repetition_scores`` — same
-    output, but via explode + keyed aggregates. Kept as the A/B
-    reference and as the shape a pure-SQL engine would run; prefer the
-    kernel form, which computes the same per-doc signals with zero
-    shuffle (scripts/ab_repetition.py: 1.90 s relational vs 0.28 s
-    kernel at sf0.1 / local[32] — 6.8×, and the gap is the shuffled
-    gram text, so it widens with corpus size).
-
-    Plan shape: one explode of (kind, gram) rows built JVM-side
-    (zip_with over sliced word arrays — no Python), then hash aggregates
-    keyed by doc-level keys with map-side partial aggregation at every
-    step; no joins. Three successive keyed aggregates (doc+kind+gram →
-    doc+kind → doc) — each strictly reduces cardinality, but the first
-    shuffle ships per-token gram TEXT, which is why the kernel form
-    wins at scale.
-    """
-    text = F.col(text_col)
-    ws = words_col(text)
-    n = F.size(ws)
-    # equal-length slices so zip_with never null-pads
-    bi = F.zip_with(
-        F.slice(ws, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(ws, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    tri_len = F.greatest(n - 2, F.lit(0))
-    tri = F.zip_with(
-        F.zip_with(
-            F.slice(ws, 1, tri_len),
-            F.slice(ws, 2, tri_len),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-        F.slice(ws, 3, tri_len),
-        lambda ab, c: F.concat_ws(" ", ab, c),
-    )
-
-    def tagged(kind: str, arr: Column) -> Column:
-        return F.transform(
-            arr,
-            lambda g: F.struct(
-                F.lit(kind).alias("kind"), g.alias("gram")
-            ),
-        )
-
-    exploded = docs.select(
-        "doc_id",
-        F.explode(
-            F.concat(tagged("uni", ws), tagged("bi", bi), tagged("tri", tri))
-        ).alias("g"),
-    ).select("doc_id", F.col("g.kind").alias("kind"), F.col("g.gram").alias("gram"))
-    per_kind = (
-        exploded.groupBy("doc_id", "kind", "gram")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("doc_id", "kind")
-        .agg(
-            F.max("cnt").alias("top_cnt"),
-            F.sum("cnt").alias("total"),
-            F.coalesce(
-                F.sum(F.when(F.col("cnt") > 1, F.col("cnt"))), F.lit(0)
-            ).alias("dup_cnt"),
-        )
-    )
-    pv = per_kind.groupBy("doc_id").pivot("kind", ["uni", "bi", "tri"]).agg(
-        F.first("top_cnt").alias("top"),
-        F.first("total").alias("total"),
-        F.first("dup_cnt").alias("dup"),
-    )
-    frac = lambda a, b: F.coalesce(  # noqa: E731
-        F.round(a.cast("double") / b, 6), F.lit(0.0)
-    )
-    return pv.select(
-        "doc_id",
-        frac(F.col("uni_top"), F.col("uni_total")).alias("top_unigram_frac"),
-        frac(F.col("bi_top"), F.col("bi_total")).alias("top_bigram_frac"),
-        frac(F.col("tri_dup"), F.col("tri_total")).alias("dup_trigram_frac"),
-    )
 
 
 # PII patterns: intentionally the same safe regex subset in Java (Spark)

@@ -30,6 +30,7 @@ from barks_ocr_spark.operators import (
     skew,
     textstats,
 )
+from barks_ocr_spark.session import local_table
 
 DEC = "decimal(18,2)"
 DEC6 = "decimal(18,6)"
@@ -638,7 +639,7 @@ def q_range_join_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from barks_ocr_spark.operators import rangejoin
 
     ev = load(spark, sf_dir, "events").select("event_type", "value")
-    tiers = spark.createDataFrame(_VALUE_TIERS, "tier string, lo double, hi double")
+    tiers = local_table(spark, _VALUE_TIERS, "tier string, lo double, hi double")
     joined = rangejoin.banded_range_join(ev, tiers, "value", "lo", "hi", 25.0)
     return joined.groupBy("event_type", "tier").agg(
         F.count("*").alias("n_events"),
@@ -1840,7 +1841,7 @@ def q_index_hyphen_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     allowlist — the OCR hyphenation-artifact detector. Vocabulary-scale
     self-join (index.index_hyphen_duplicates)."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    plant = spark.createDataFrame(_HYPHEN_PLANT, "doc_id long, text string")
+    plant = local_table(spark, _HYPHEN_PLANT, "doc_id long, text string")
     idx = index.inverted_index(docs.unionAll(plant))
     return index.index_hyphen_duplicates(idx, allowed=_HYPHEN_ALLOWED)
 

@@ -255,6 +255,18 @@ def test_curlify_vec_matches_reference_scan():
     assert got == want
 
 
+def _extract_pandas(docs, repeating: frozenset[str]):
+    """The pass-2 oracle: the golden pandas kernel run per batch via
+    mapInPandas, on the same partitions the Arrow path uses."""
+    from barks_ocr_spark.schemas import DOCUMENTS_SPANS_SCHEMA
+
+    def _gen(batches):
+        for batch in batches:
+            yield pk.extract_documents(batch, repeating)
+
+    return docs.select("doc_id", "spans").mapInPandas(_gen, DOCUMENTS_SPANS_SCHEMA)
+
+
 def test_spark_arrow_path_matches_pandas_path(spark):
     from barks_ocr_spark.datagen import docs as dg
     from barks_ocr_spark.operators import extraction
@@ -264,10 +276,13 @@ def test_spark_arrow_path_matches_pandas_path(spark):
     docs = spark.createDataFrame(pdf, schema=DOCUMENTS_SPANS_SCHEMA).repartition(8)
     a = {
         r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
-        for r in extraction.extract(docs, kernel="arrow").collect()
+        for r in extraction.extract(docs).collect()
     }
+    # golden pass 1 in local pandas, golden pass 2 per Spark batch
+    repeating = pk.repeating_headings_from_flat(pk.flatten(pdf))
+    assert repeating == extraction.repeating_heading_set(docs)
     p = {
         r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
-        for r in extraction.extract(docs, kernel="pandas").collect()
+        for r in _extract_pandas(docs, repeating).collect()
     }
     assert a == p

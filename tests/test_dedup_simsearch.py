@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.operators import dedup, simsearch
@@ -100,7 +101,7 @@ def test_minhash_short_and_null_docs(spark):
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     assert dedup.minhash_near_duplicates(docs).count() == 0
     assert dedup.ngram_jaccard_pairs(docs).count() == 0
-    sh = docs.select(dedup.shingles_col(F.col("text")).alias("s")).collect()
+    sh = docs.select(dedup.shingles_from_text(F.col("text")).alias("s")).collect()
     assert all(r["s"] == [] for r in sh)
 
 
@@ -108,6 +109,83 @@ def test_simhash_hamming_zero_for_identical(spark):
     out = dedup.simhash_near_duplicates(_corpus(spark), max_hamming=3).collect()
     ham = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in out}
     assert ham[(1, 2)] == 0
+
+
+def test_jaccard_prefix_ceilings_are_exact(spark):
+    # ⌈t·n⌉ (prefix length) and ⌈t·(n_a+n_b)/(1+t)⌉ (bitmap bound) as
+    # Spark evaluates them, against exact Fraction ceilings — including
+    # thresholds whose 16-17 digit numerators overflow a bigint product
+    import math
+    from fractions import Fraction
+
+    thresholds = [
+        0.1, 0.5, 0.8, 0.8000000000000001, 0.9, 0.95, 0.9999999999999999,
+        1 / 3, 2 ** -0.5, 1.0,
+    ]
+    sizes = [0, 1, 2, 3, 7, 1000, 1298, 15_000, 2**20 + 1, 2**31 - 1]
+    df = spark.createDataFrame(
+        [(a, b) for a in sizes for b in sizes[::3]], "n_a int, n_b int"
+    )
+    cols, want = [], []
+    for i, t in enumerate(thresholds):
+        fr = Fraction(str(t))
+        ta, tb = fr.numerator, fr.denominator
+        cols.append(dedup._ceil_frac(ta, tb, F.col("n_a")).alias(f"req{i}"))
+        cols.append(
+            dedup._ceil_frac(
+                ta, ta + tb, F.col("n_a").cast("long") + F.col("n_b")
+            ).alias(f"min{i}")
+        )
+        want.append(
+            lambda a, b, fr=fr: (
+                math.ceil(fr * a), math.ceil(fr * (a + b) / (1 + fr))
+            )
+        )
+    for r in df.select("n_a", "n_b", *cols).collect():
+        for i, ref in enumerate(want):
+            assert (r[f"req{i}"], r[f"min{i}"]) == ref(r["n_a"], r["n_b"]), (
+                thresholds[i], r["n_a"], r["n_b"]
+            )
+
+
+@pytest.mark.parametrize("n_words", [1300, 2400])
+def test_jaccard_long_docs_at_a_long_threshold(spark, n_words):
+    # long docs at a threshold with a 16-digit Fraction numerator
+    # (0.8000000000000001 is the double 4000000000000001/5·10¹⁵): the
+    # bigint products t·(n_a+n_b) (1,300 words) and t·n (2,400 words)
+    # pass 2⁶³, which overflowed under ANSI mode
+    from fractions import Fraction
+
+    base = [f"w{i}" for i in range(n_words)]
+    half = n_words // 2
+    texts = {
+        1: base,
+        2: base[:-1] + ["tail"],  # one shingle off doc 1
+        3: base[:half] + [f"v{i}" for i in range(n_words - half)],  # half shared
+    }
+    docs = spark.createDataFrame(
+        [(i, " ".join(w)) for i, w in texts.items()], "doc_id long, text string"
+    )
+    threshold = 0.8000000000000001
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in dedup.ngram_jaccard_pairs(docs, threshold=threshold).collect()
+    }
+    shingles = {
+        i: {" ".join(w[j : j + 3]) for j in range(len(w) - 2)}
+        for i, w in texts.items()
+    }
+    want = {}
+    for a in texts:
+        for b in texts:
+            if a < b:
+                jac = Fraction(
+                    len(shingles[a] & shingles[b]), len(shingles[a] | shingles[b])
+                )
+                if jac >= Fraction(str(threshold)):
+                    want[(a, b)] = float(jac)
+    assert want == {(1, 2): (n_words - 3) / (n_words - 1)}
+    assert got == want
 
 
 def test_hot_shingle_cap_drops_boilerplate(spark):
@@ -337,18 +415,6 @@ def test_sign_bits_py_matches_column_form(spark):
         assert simsearch.sign_bits_py(list(r["v"]), 16, 4) == r["sig"]
 
 
-def test_simhash_kernel_and_relational_agree_on_pairs(spark):
-    # signature VALUES differ (SipHash vs xxhash64) but the pair
-    # semantics must not: identical docs collide at hamming 0 in both
-    docs = _corpus(spark)
-    for use_kernel in (True, False):
-        out = dedup.simhash_near_duplicates(
-            docs, max_hamming=3, use_kernel=use_kernel
-        ).collect()
-        ham = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in out}
-        assert ham[(1, 2)] == 0, f"use_kernel={use_kernel}"
-
-
 def test_simhash_hot_bucket_join_input_is_bounded(spark):
     # 200 byte-identical docs = ONE distinct signature: the segment
     # self-join's input must be n_distinct_sigs × n_segments rows, not
@@ -439,13 +505,53 @@ def test_simhash_batch_fold_paths_match_reference():
             assert (g is pd.NA and w is None) or g == w, (g, w)
 
 
+def _simhash_relational(docs, text_col="text"):
+    """SimHash signatures in Spark SQL expressions only: explode the
+    canonical_text tokens, hash each with xxhash64, collapse token
+    multiplicity, then 64 weighted per-bit vote sums. The signature
+    VALUES differ from the kernel's (xxhash64 vs SipHash token hashes);
+    the contract — which docs get a signature — must not."""
+    from barks_ocr_spark.operators.textstats import canonical_text
+
+    words = F.split(canonical_text(F.col(text_col)), " ")
+    tok = (
+        docs.select("doc_id", F.explode(words).alias("word"))
+        .filter(F.col("word") != "")
+        .select("doc_id", F.xxhash64(F.col("word")).alias("_h"))
+        .groupBy("doc_id", "_h")
+        .agg(F.count("*").alias("_c"))
+    )
+    h, c = F.col("_h"), F.col("_c")
+    # bit 63 is the long sign bit, hence the negative literal
+    masks = [1 << j for j in range(63)] + [-(1 << 63)]
+    votes = [
+        F.sum(F.when(h.bitwiseAND(F.lit(m).cast("long")) != 0, c).otherwise(-c)).alias(
+            f"v{j}"
+        )
+        for j, m in enumerate(masks)
+    ]
+    agg = tok.groupBy("doc_id").agg(*votes)
+    sig = None
+    for j, m in enumerate(masks):
+        bit = F.when(F.col(f"v{j}") > 0, F.lit(m).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+        sig = bit if sig is None else sig + bit
+    return agg.select("doc_id", sig.alias("simhash"))
+
+
 def test_simhash_kernel_contract_matches_relational(spark):
-    # empty / whitespace / null docs yield no signature row in either form
-    rows = [(1, ""), (2, "   "), (3, None), (4, "actual words here")]
+    # empty / whitespace / null docs yield no signature row in either
+    # form; identical texts share one signature in both
+    rows = [
+        (1, ""), (2, "   "), (3, None), (4, "actual words here"),
+        (5, "Actual  words, here!"), (6, "other text entirely"),
+    ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for fn in (dedup.simhash_signatures_kernel, dedup.simhash_signatures):
-        got = sorted(r["doc_id"] for r in fn(docs).collect())
-        assert got == [4], fn.__name__
+    for fn in (dedup.simhash_signatures_kernel, _simhash_relational):
+        got = {r["doc_id"]: r["simhash"] for r in fn(docs).collect()}
+        assert sorted(got) == [4, 5, 6], fn.__name__
+        assert got[4] == got[5] and got[4] != got[6], fn.__name__
 
 
 def _emb_table(spark, sf="/root/testdata/sf0.001"):

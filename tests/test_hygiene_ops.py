@@ -3,6 +3,10 @@ benchmark decontamination (operators/textstats.py, operators/decontam.py)."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
+import pandas as pd
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.operators import decontam, textstats
@@ -12,6 +16,94 @@ from test_plan_shapes import SF
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+# ── repetition_scores oracles ──────────────────────────────────────────
+def _repetition_loop(texts: pd.Series) -> pd.DataFrame:
+    """The Counter-per-doc form of the repetition kernel — the
+    differential reference for textstats._repetition_scores_batch."""
+    ws_re = re.compile(r"\s+", re.ASCII)
+    round6 = textstats._round6
+
+    out = {"top_unigram_frac": [], "top_bigram_frac": [], "dup_trigram_frac": []}
+    for t in texts:
+        ws = ws_re.split(str(t).lower().strip(" "))
+        uni = Counter(ws)
+        bi = Counter(f"{a} {b}" for a, b in zip(ws, ws[1:]))
+        tri = Counter(f"{a} {b} {c}" for a, b, c in zip(ws, ws[1:], ws[2:]))
+        out["top_unigram_frac"].append(round6(max(uni.values(), default=0), len(ws)))
+        out["top_bigram_frac"].append(
+            round6(max(bi.values(), default=0), max(len(ws) - 1, 0))
+        )
+        out["dup_trigram_frac"].append(
+            round6(sum(c for c in tri.values() if c > 1), max(len(ws) - 2, 0))
+        )
+    return pd.DataFrame(out)
+
+
+def _repetition_relational(docs, text_col: str = "text"):
+    """The relational formulation of textstats.repetition_scores — the
+    same per-doc signals from one explode of (kind, gram) rows built
+    JVM-side and three keyed aggregates (doc+kind+gram → doc+kind →
+    doc), in Spark SQL expressions only: the oracle for the kernel's
+    tokenization, zero-denominator and rounding semantics."""
+    ws = textstats.words_col(F.col(text_col))
+    n = F.size(ws)
+    # equal-length slices so zip_with never null-pads
+    bi = F.zip_with(
+        F.slice(ws, 1, F.greatest(n - 1, F.lit(0))),
+        F.slice(ws, 2, F.greatest(n - 1, F.lit(0))),
+        lambda a, b: F.concat_ws(" ", a, b),
+    )
+    tri_len = F.greatest(n - 2, F.lit(0))
+    tri = F.zip_with(
+        F.zip_with(
+            F.slice(ws, 1, tri_len),
+            F.slice(ws, 2, tri_len),
+            lambda a, b: F.concat_ws(" ", a, b),
+        ),
+        F.slice(ws, 3, tri_len),
+        lambda ab, c: F.concat_ws(" ", ab, c),
+    )
+
+    def tagged(kind, arr):
+        return F.transform(
+            arr, lambda g: F.struct(F.lit(kind).alias("kind"), g.alias("gram"))
+        )
+
+    exploded = docs.select(
+        "doc_id",
+        F.explode(
+            F.concat(tagged("uni", ws), tagged("bi", bi), tagged("tri", tri))
+        ).alias("g"),
+    ).select("doc_id", F.col("g.kind").alias("kind"), F.col("g.gram").alias("gram"))
+    per_kind = (
+        exploded.groupBy("doc_id", "kind", "gram")
+        .agg(F.count("*").alias("cnt"))
+        .groupBy("doc_id", "kind")
+        .agg(
+            F.max("cnt").alias("top_cnt"),
+            F.sum("cnt").alias("total"),
+            F.coalesce(
+                F.sum(F.when(F.col("cnt") > 1, F.col("cnt"))), F.lit(0)
+            ).alias("dup_cnt"),
+        )
+    )
+    pv = per_kind.groupBy("doc_id").pivot("kind", ["uni", "bi", "tri"]).agg(
+        F.first("top_cnt").alias("top"),
+        F.first("total").alias("total"),
+        F.first("dup_cnt").alias("dup"),
+    )
+
+    def frac(a, b):
+        return F.coalesce(F.round(a.cast("double") / b, 6), F.lit(0.0))
+
+    return pv.select(
+        "doc_id",
+        frac(F.col("uni_top"), F.col("uni_total")).alias("top_unigram_frac"),
+        frac(F.col("bi_top"), F.col("bi_total")).alias("top_bigram_frac"),
+        frac(F.col("tri_dup"), F.col("tri_total")).alias("dup_trigram_frac"),
+    )
 
 
 # ── repetition_scores ──────────────────────────────────────────────────
@@ -211,7 +303,7 @@ def test_repetition_kernel_matches_relational(spark):
     docs = _docs(spark, rows)
     a = sorted(map(tuple, textstats.repetition_scores(docs).collect()))
     b = sorted(
-        map(tuple, textstats.repetition_scores_relational(docs).collect())
+        map(tuple, _repetition_relational(docs).collect())
     )
     assert a == b
 
@@ -737,5 +829,5 @@ def test_repetition_kernel_vectorized_matches_loop():
     )
     for batch in (edge, rand):
         got = textstats._repetition_scores_batch(batch)
-        want = textstats._repetition_scores_batch_loop(batch)
+        want = _repetition_loop(batch)
         pd.testing.assert_frame_equal(got, want)

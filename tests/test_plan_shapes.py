@@ -70,9 +70,10 @@ def test_extraction_task_cap_merges_partitions_without_shuffle(spark):
 def test_driver_side_tables_plan_as_local_scans(spark):
     """Tables built on the driver from collected values — the heavy
     hitters' top-k (and its empty form), the curated integrity terms and
-    the pipeline's lineage rows — plan as a ``LocalTableScan`` held in
-    the plan, never as ``Scan ExistingRDD``, whose collect starts one
-    Python task per partition."""
+    the pipeline's lineage rows — and the registry queries' constant
+    tables (range-join tiers, planted hyphen docs) plan as a
+    ``LocalTableScan`` held in the plan, never as ``Scan ExistingRDD``,
+    whose collect starts one Python task per partition."""
     from barks_ocr_spark.operators import index, pipeline, sketches
     from barks_ocr_spark.operators.cacheutil import unpersist_intermediates
 
@@ -91,6 +92,8 @@ def test_driver_side_tables_plan_as_local_scans(spark):
         "heavy_hitters_empty": sketches.heavy_hitters(docs.limit(0), k=5),
         "missing_terms": index.index_integrity_missing_terms(words, ["Duck", "zebra"]),
         "lineage": lineage,
+        "range_join_tiers": Q.q_range_join_tiers(spark, SF),
+        "index_hyphen_dups": Q.q_index_hyphen_dups(spark, SF),
     }
     try:
         for name, df in tables.items():
@@ -142,12 +145,17 @@ def test_word_index_aggregates_partially(spark):
 
 
 def test_minhash_signature_agg_is_partial(spark):
+    # the k min() signature aggregate combines map-side: the shuffle
+    # carries k longs per distinct text, not one row per shingle
     from barks_ocr_spark.operators import dedup
+    from barks_ocr_spark.operators.cacheutil import unpersist_intermediates
 
     docs = Q.load(spark, SF, "documents")
-    sh = dedup.shingle_table(docs).select("doc_id", "shingle")
-    plan = _plan(dedup.minhash_signatures_from_shingles(sh, k=8))
-    assert "partial_min" in plan
+    try:
+        plan = _plan(dedup.minhash_near_duplicates(docs, k=8, bands=4))
+        assert "partial_min" in plan
+    finally:
+        unpersist_intermediates()
 
 
 def test_topk_cosine_is_takeordered_not_full_sort(spark):
@@ -174,15 +182,6 @@ def test_repetition_scores_is_zero_shuffle_kernel(spark):
     plan = _plan(Q.q_repetition_scores(spark, SF))
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan or "PythonUDF" in plan
-
-
-def test_repetition_relational_aggregates_partially(spark):
-    # the A/B reference form keeps its map-side combine pin
-    from barks_ocr_spark.operators import textstats
-    from barks_ocr_spark.plans.queries import load
-
-    df = textstats.repetition_scores_relational(load(spark, SF, "documents"))
-    assert "partial_count" in _plan(df)
 
 
 def test_pii_redact_is_pure_projection(spark):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from barks_ocr_spark.operators import sketches
 
 
@@ -49,18 +51,35 @@ def test_kmv_pre_trim_bounds_shuffle_rows(spark):
     assert trimmed.count() <= 16 * n_batches  # ≤ k per batch, never 5000
 
 
+def _kmv_untrimmed(rows, k):
+    """The KMV estimate with no trim, in plain Python: the k smallest
+    distinct md5-prefix hashes of each group."""
+    import hashlib
+
+    hashes = {}
+    for g, v in rows:
+        h = int(hashlib.md5(str(v).encode()).hexdigest()[:8], 16)
+        hashes.setdefault(g, set()).add(h)
+    out = {}
+    for g, hs in hashes.items():
+        smallest = sorted(hs)[:k]
+        if len(smallest) < k:
+            out[g] = float(len(smallest))
+        else:
+            out[g] = (k - 1) / (smallest[-1] / 4294967296.0)
+    return out
+
+
 def test_kmv_pre_trim_differential(spark):
-    """pre_trim must be result-invisible: identical estimates with the
-    trim on and off, across partitionings."""
+    """The per-batch trim must be result-invisible: identical estimates
+    to the untrimmed k-smallest sketch, across partitionings."""
     rows = [("a", i % 700) for i in range(3000)] + [("b", i) for i in range(9)]
-    df = _df(spark, rows).repartition(7)
-    on = {r["g"]: r["est_distinct"] for r in sketches.kmv_distinct(df, "g", "v", k=32).collect()}
-    off = {
-        r["g"]: r["est_distinct"]
-        for r in sketches.kmv_distinct(df, "g", "v", k=32, pre_trim=False).collect()
-    }
-    assert on == off
-    assert on["b"] == 9.0
+    want = _kmv_untrimmed(rows, 32)
+    for parts in (1, 7):
+        df = _df(spark, rows).repartition(parts)
+        got = {r["g"]: r["est_distinct"] for r in sketches.kmv_distinct(df, "g", "v", k=32).collect()}
+        assert got == pytest.approx(want, abs=5e-7)
+    assert got["b"] == 9.0
 
 
 # ─── heavy hitters (exact two-pass Misra-Gries) ─────────────────────────
