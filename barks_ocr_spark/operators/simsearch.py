@@ -1,20 +1,32 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding tables (``vec_id`` long,
+``embedding`` array<float>).
 
-- ``brute_force_topk``: exact cosine top-k against a query vector.
-  The query is a literal folded into the plan (broadcast by value); the
-  scan is embarrassingly parallel, the only shuffle is the final top-k
-  (a TakeOrdered, not a full sort).
-- ``cosine_pairs``: all pairs ≥ threshold, via sign-LSH bucketing so the
-  self-join never goes O(n²) across buckets.
-- ``lsh_topk`` / ``lsh_write`` + ``lsh_topk_indexed``: the scale path —
-  prune with sign-LSH hamming distance, then exact-rescore only the
-  surviving fraction. The ``_write`` half materializes signatures at
-  write time so 100 TB queries never recompute them at read.
+Each ANN family is an encode column, a ``_write`` that stores it and one
+probe. The inline search adds the encode column on the fly, the indexed
+one reads it from the index, and both run the family's probe; every
+search ends in the same exact-cosine rescore of its candidates
+(:func:`brute_force_topk`).
+
+==========  =============  ==============  ============================
+family      encode column  write           probe: inline / indexed
+==========  =============  ==============  ============================
+exact       —              —               brute_force_topk / —
+IVF-flat    cell           ivf_write       ivf_topk / ivf_topk_indexed
+sign-LSH    sig            lsh_write       lsh_topk / lsh_topk_indexed
+LSH bands   sig            lsh_band_write  — / lsh_topk_banded
+PQ-ADC      pq_codes       pq_write        pq_topk / pq_topk_indexed
+==========  =============  ==============  ============================
+
+Probes take the vector length from the query. The writers and
+``cosine_pairs`` (all pairs ≥ threshold, a sign-LSH bucketed self-join)
+must be given ``dim``: other lengths get a null cell, signature 0 or
+null codes.
 
 Scoring strategy (measured at 2k and 512k rows × 64 dims, local[32]):
 
 - query-vector cosine (:func:`cosine_to_query`) and LSH signatures /
-  IVF cells are numpy matmuls in Arrow-batched ``pandas_udf``s.
+  IVF cells / PQ codes are numpy matmuls in Arrow-batched
+  ``pandas_udf``s, all fed by one batch adapter (:func:`_rows_matrix`).
   Signatures: 0.61s vs 2.49s for the 16-plane HOF chain (higher-order
   functions evaluate per-element interpreted lambda closures, not
   codegen), and a fully unrolled 16×64-term codegen expression exceeds
@@ -31,7 +43,9 @@ Scoring strategy (measured at 2k and 512k rows × 64 dims, local[32]):
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
 import numpy as np
 import pandas as pd
@@ -40,6 +54,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.operators.cacheutil import persist_tracked as _persist
+
+ID = "vec_id"
+VEC = "embedding"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -61,7 +78,43 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-_COS_UDF_CACHE: dict = {}
+def _rows_matrix(s: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """Batch adapter of every vector kernel: indices of the rows whose
+    vector has length ``dim``, and those vectors as a float64 matrix."""
+    arr = s.to_numpy()
+    lens = np.fromiter(
+        (0 if x is None else len(x) for x in arr), dtype=np.int64, count=len(arr)
+    )
+    ok = np.flatnonzero(lens == dim)
+    if not ok.size:
+        return ok, np.empty((0, dim), dtype=np.float64)
+    return ok, np.vstack([arr[i] for i in ok]).astype(np.float64)
+
+
+def _quantize(m: np.ndarray) -> np.ndarray:
+    """⌊v·1e6⌋ as int64 — the integer space of every encode decision."""
+    return np.floor(m * 1_000_000.0).astype(np.int64)
+
+
+@functools.lru_cache(maxsize=None)
+def _cos_udf(key: tuple[float, ...]):
+    qa = np.array(key, dtype=np.float64)
+    qn = float(np.sqrt((qa * qa).sum()))
+    dim = len(key)
+
+    @F.pandas_udf("double")
+    def cos(s: pd.Series) -> pd.Series:
+        ok, m = _rows_matrix(s, dim)
+        out = np.zeros(len(s), dtype=np.float64)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            out[ok] = (m @ qa) / (np.sqrt((m * m).sum(axis=1)) * qn)
+        # mask length-mismatch rows to NULL (not NaN: Spark sorts
+        # NaN above every double, which would poison desc top-k)
+        null = np.ones(len(s), dtype=bool)
+        null[ok] = False
+        return pd.Series(pd.arrays.FloatingArray(out, null))
+
+    return cos
 
 
 def cosine_to_query(vec: Column, query_vec: list[float]) -> Column:
@@ -80,45 +133,18 @@ def cosine_to_query(vec: Column, query_vec: list[float]) -> Column:
     Rows whose vector length ≠ len(query) score null (the zip_with
     null-pad behavior); genuine 0/0 (zero vectors) stays NaN, exactly as
     JVM double division."""
-    key = tuple(float(x) for x in query_vec)
-    if key not in _COS_UDF_CACHE:
-        qa = np.array(key, dtype=np.float64)
-        qn = float(np.sqrt((qa * qa).sum()))
-        dim = len(key)
-
-        @F.pandas_udf("double")
-        def cos(s: pd.Series) -> pd.Series:
-            n = len(s)
-            arr = s.to_numpy()
-            lens = np.fromiter(
-                (0 if x is None else len(x) for x in arr), dtype=np.int64, count=n
-            )
-            ok = np.flatnonzero(lens == dim)
-            out = np.zeros(n, dtype=np.float64)
-            if ok.size:
-                m = np.vstack([arr[i] for i in ok]).astype(np.float64)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    out[ok] = (m @ qa) / (np.sqrt((m * m).sum(axis=1)) * qn)
-            # mask length-mismatch rows to NULL (not NaN: Spark sorts
-            # NaN above every double, which would poison desc top-k)
-            return pd.Series(pd.arrays.FloatingArray(out, lens != dim))
-
-        _COS_UDF_CACHE[key] = cos
-    return _COS_UDF_CACHE[key](vec)
+    return _cos_udf(tuple(float(x) for x in query_vec))(vec)
 
 
-def brute_force_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k of ``query_vec`` over the embeddings table."""
-    score = cosine_to_query(F.col(vec_col), query_vec)
+def brute_force_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
+    """Exact cosine top-k of ``query_vec`` over the embeddings table:
+    scores rounded to 6 places, top k by (score desc, vec_id) — a
+    TakeOrdered, not a sort. Every ANN search ends here, on its
+    candidates."""
+    score = cosine_to_query(F.col(VEC), query_vec)
     return (
-        embeddings.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
+        embeddings.select(F.col(ID), F.round(score, 6).alias("score"))
+        .orderBy(F.desc("score"), F.col(ID))
         .limit(k)
     )
 
@@ -154,38 +180,24 @@ def sign_bits_py(vec: list[float], n_planes: int = 16, dim: int | None = None) -
     return total
 
 
-_SIG_UDF_CACHE: dict = {}
-
-
+@functools.lru_cache(maxsize=None)
 def _sig_udf(n_planes: int, dim: int):
     """Arrow-batched signature kernel: one (rows × dim) · (dim × planes)
     int64 matmul per batch — exact integer arithmetic, same sign
     decisions as the SQL oracle's literal-weight dot products."""
-    key = (n_planes, dim)
-    if key not in _SIG_UDF_CACHE:
-        W = np.array(
-            [plane_weights_int(p, dim) for p in range(n_planes)], dtype=np.int64
-        ).T  # dim × planes
-        POW = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
+    W = np.array(
+        [plane_weights_int(p, dim) for p in range(n_planes)], dtype=np.int64
+    ).T  # dim × planes
+    POW = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
 
-        @F.pandas_udf("long")
-        def sig(s: pd.Series) -> pd.Series:
-            n = len(s)
-            out = np.zeros(n, dtype=np.int64)
-            arr = s.to_numpy()
-            lens = np.fromiter(
-                (0 if x is None else len(x) for x in arr), dtype=np.int64, count=n
-            )
-            ok = np.flatnonzero(lens == dim)
-            if ok.size:
-                m = np.vstack([arr[i] for i in ok]).astype(np.float64)
-                vint = np.floor(m * 1_000_000.0).astype(np.int64)
-                scores = vint @ W
-                out[ok] = ((scores > 0) * POW).sum(axis=1)
-            return pd.Series(out)
+    @F.pandas_udf("long")
+    def sig(s: pd.Series) -> pd.Series:
+        ok, m = _rows_matrix(s, dim)
+        out = np.zeros(len(s), dtype=np.int64)
+        out[ok] = (((_quantize(m) @ W) > 0) * POW).sum(axis=1)
+        return pd.Series(out)
 
-        _SIG_UDF_CACHE[key] = sig
-    return _SIG_UDF_CACHE[key]
+    return sig
 
 
 def sign_lsh_bits(vec: Column, n_planes: int = 16, dim: int = 64) -> Column:
@@ -214,36 +226,23 @@ def centroid_ints(c: int, dim: int) -> list[int]:
     return plane_weights_int(c + 100_003, dim)
 
 
-_CELL_UDF_CACHE: dict = {}
-
-
+@functools.lru_cache(maxsize=None)
 def _cell_udf(n_centroids: int, dim: int):
-    key = (n_centroids, dim)
-    if key not in _CELL_UDF_CACHE:
-        C = np.array(
-            [centroid_ints(c, dim) for c in range(n_centroids)], dtype=np.int64
-        ).T  # dim × centroids
+    C = np.array(
+        [centroid_ints(c, dim) for c in range(n_centroids)], dtype=np.int64
+    ).T  # dim × centroids
 
-        @F.pandas_udf("int")
-        def cell(s: pd.Series) -> pd.Series:
-            n = len(s)
-            arr = s.to_numpy()
-            lens = np.fromiter(
-                (0 if x is None else len(x) for x in arr), dtype=np.int64, count=n
-            )
-            ok = np.flatnonzero(lens == dim)
-            vals = np.full(n, -1, dtype=np.int64)
-            if ok.size:
-                m = np.vstack([arr[i] for i in ok]).astype(np.float64)
-                vint = np.floor(m * 1_000_000.0).astype(np.int64)
-                # np.argmax takes the FIRST maximum — ties to lowest cell
-                vals[ok] = np.argmax(vint @ C, axis=1)
-            out = pd.Series(vals, dtype="Int32")
-            out[vals < 0] = pd.NA  # length-mismatch rows: null cell
-            return out
+    @F.pandas_udf("int")
+    def cell(s: pd.Series) -> pd.Series:
+        ok, m = _rows_matrix(s, dim)
+        vals = np.full(len(s), -1, dtype=np.int64)
+        # np.argmax takes the FIRST maximum — ties to lowest cell
+        vals[ok] = np.argmax(_quantize(m) @ C, axis=1)
+        out = pd.Series(vals, dtype="Int32")
+        out[vals < 0] = pd.NA  # length-mismatch rows: null cell
+        return out
 
-        _CELL_UDF_CACHE[key] = cell
-    return _CELL_UDF_CACHE[key]
+    return cell
 
 
 def ivf_cell(vec: Column, n_centroids: int = 16, dim: int = 64) -> Column:
@@ -274,44 +273,36 @@ def ivf_probe_cells(
     return [c for _, c in scored[:nprobe]]
 
 
+def _ivf_probe(
+    cells: DataFrame, query_vec: list[float], k: int, n_centroids: int, nprobe: int
+) -> DataFrame:
+    """IVF probe over a table with a ``cell`` column: keep the nprobe
+    cells nearest the query, exact-rescore their members."""
+    probe = ivf_probe_cells(query_vec, n_centroids, nprobe)
+    return brute_force_topk(cells.filter(F.col("cell").isin(probe)), query_vec, k)
+
+
 def ivf_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
+    embeddings: DataFrame, query_vec: list[float], k: int = 10,
+    n_centroids: int = 16, nprobe: int = 4,
 ) -> DataFrame:
     """IVF-flat approximate top-k: scan only the ``nprobe`` inverted
     lists nearest the query, exact-rescore their members.
 
     Scale shape: with the cell column materialized at write time and the
-    table partitioned by it, this plan reads nprobe/n_centroids of the
-    corpus and touches no shuffle except the final TakeOrdered. With
-    nprobe = n_centroids it degrades gracefully to exact brute force
-    (pinned by test_ivf_full_probe_equals_brute_force).
+    table partitioned by it (:func:`ivf_topk_indexed`), this plan reads
+    nprobe/n_centroids of the corpus and touches no shuffle except the
+    final TakeOrdered. With nprobe = n_centroids it degrades gracefully
+    to exact brute force (pinned by test_ivf_full_probe_equals_brute_force).
     """
-    if dim is None:
-        dim = len(query_vec)
-    probe = ivf_probe_cells(query_vec, n_centroids, nprobe)
-    v = F.col(vec_col)
-    pruned = embeddings.filter(ivf_cell(v, n_centroids, dim).isin(probe))
-    score = cosine_to_query(v, query_vec)
-    return (
-        pruned.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
+    cell = ivf_cell(F.col(VEC), n_centroids, len(query_vec))
+    return _ivf_probe(
+        embeddings.withColumn("cell", cell), query_vec, k, n_centroids, nprobe
     )
 
 
 def ivf_write(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    dim: int = 64,
+    embeddings: DataFrame, path: str, n_centroids: int = 16, *, dim: int
 ) -> None:
     """Materialize the IVF index: embeddings written partitioned by cell.
 
@@ -322,9 +313,8 @@ def ivf_write(
     Repartitioning by cell before the write gives one file per cell per
     shuffle partition rather than every task writing every cell.
     """
-    v = F.col(vec_col)
     (
-        embeddings.withColumn("cell", ivf_cell(v, n_centroids, dim))
+        embeddings.withColumn("cell", ivf_cell(F.col(VEC), n_centroids, dim))
         .repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -333,14 +323,8 @@ def ivf_write(
 
 
 def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    spark, path: str, query_vec: list[float], k: int = 10,
+    n_centroids: int = 16, nprobe: int = 4,
 ) -> DataFrame:
     """Top-k over a materialized IVF index (:func:`ivf_write` output).
 
@@ -349,22 +333,47 @@ def ivf_topk_indexed(
     in the scan — pinned by test_ivf_indexed_partition_pruning); the
     non-probe (n_centroids - nprobe)/n_centroids of the corpus is never
     read, decoded, or scored."""
-    probe = ivf_probe_cells(query_vec, n_centroids, nprobe)
-    pruned = spark.read.parquet(path).filter(F.col("cell").isin(probe))
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        pruned.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
+    return _ivf_probe(spark.read.parquet(path), query_vec, k, n_centroids, nprobe)
+
+
+def _within_hamming(q_sig: int, max_hamming: int) -> Column:
+    """The sign-LSH prune: ``sig`` within ``max_hamming`` bits of the query's."""
+    return F.bit_count(F.col("sig").bitwiseXOR(F.lit(q_sig))) <= max_hamming
+
+
+def _lsh_probe(
+    sigs: DataFrame, query_vec: list[float], k: int, n_planes: int, max_hamming: int
+) -> DataFrame:
+    """LSH probe over a table with a ``sig`` column: hamming-prune, then
+    exact-rescore the survivors."""
+    q_sig = sign_bits_py(query_vec, n_planes)
+    return brute_force_topk(sigs.filter(_within_hamming(q_sig, max_hamming)), query_vec, k)
+
+
+def lsh_topk(
+    embeddings: DataFrame, query_vec: list[float], k: int = 10,
+    n_planes: int = 16, max_hamming: int = 6,
+) -> DataFrame:
+    """Approximate top-k: prune candidates whose sign-LSH signature is
+    > max_hamming bits from the query's, exact-rescore the rest.
+
+    The query's signature folds to a driver-side integer literal
+    (:func:`sign_bits_py` — exact same arithmetic), so the per-row work
+    is one matmul-UDF signature + a codegen'd bit_count. On a
+    materialized index (:func:`lsh_write`) even the signature disappears
+    — see :func:`lsh_topk_indexed`. At 10^12 rows the prune typically
+    keeps <1% of the table; the rescore is the same exact cosine as
+    brute force, so recall failures are visible by diffing against
+    ``brute_force_topk`` on a sample.
+    """
+    sig = sign_lsh_bits(F.col(VEC), n_planes, len(query_vec))
+    return _lsh_probe(
+        embeddings.withColumn("sig", sig), query_vec, k, n_planes, max_hamming
     )
 
 
 def lsh_write(
-    embeddings: DataFrame,
-    path: str,
-    n_planes: int = 16,
-    vec_col: str = "embedding",
-    dim: int = 64,
+    embeddings: DataFrame, path: str, n_planes: int = 16, *, dim: int
 ) -> None:
     """Materialize sign-LSH signatures at write time — the sign-LSH
     analogue of :func:`ivf_write`: the signature matmul runs ONCE here,
@@ -380,51 +389,35 @@ def lsh_write(
     tables, pigeonhole-exact for h < B) so probes read band-bucket
     slivers; this single-table form keeps storage 1×.
     """
-    v = F.col(vec_col)
     (
-        embeddings.withColumn("sig", sign_lsh_bits(v, n_planes, dim))
+        embeddings.withColumn("sig", sign_lsh_bits(F.col(VEC), n_planes, dim))
         .write.mode("overwrite")
         .parquet(path)
     )
 
 
 def lsh_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 16,
-    max_hamming: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
+    spark, path: str, query_vec: list[float], k: int = 10,
+    n_planes: int = 16, max_hamming: int = 6,
 ) -> DataFrame:
     """Approximate top-k over a materialized LSH index (:func:`lsh_write`
     output): hamming-prune on the STORED signature column (no signature
     recompute — the plan contains no ArrowEvalPython stage, pinned by
     test_lsh_indexed_no_signature_recompute), exact-rescore survivors."""
-    if dim is None:
-        dim = len(query_vec)
-    q_sig = sign_bits_py(query_vec, n_planes, dim)
-    pruned = spark.read.parquet(path).filter(
-        F.bit_count(F.col("sig").bitwiseXOR(F.lit(q_sig))) <= max_hamming
-    )
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        pruned.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    return _lsh_probe(spark.read.parquet(path), query_vec, k, n_planes, max_hamming)
+
+
+def _band_slices(n_planes: int, n_bands: int) -> list[tuple[int, int]]:
+    """(shift, mask) of each band's slice of an n_planes-bit signature:
+    band i's value is ``(sig >> shift) & mask``."""
+    if n_planes % n_bands != 0:
+        raise ValueError(f"n_planes={n_planes} not divisible by n_bands={n_bands}")
+    band_bits = n_planes // n_bands
+    return [(i * band_bits, (1 << band_bits) - 1) for i in range(n_bands)]
 
 
 def lsh_band_write(
-    embeddings: DataFrame,
-    path: str,
-    n_planes: int = 16,
-    n_bands: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
+    embeddings: DataFrame, path: str, n_planes: int = 16, n_bands: int = 8, *, dim: int
 ) -> None:
     """Banded multi-probe LSH index — the 10^12-row layout
     :func:`lsh_write`'s docstring names. Two tables:
@@ -442,29 +435,21 @@ def lsh_band_write(
     agrees with it EXACTLY on ≥1 band, so reading the n_bands probe
     slivers covers every qualifying candidate — :func:`lsh_topk_banded`
     is then exact vs :func:`lsh_topk` for max_hamming < n_bands."""
-    if n_planes % n_bands != 0:
-        raise ValueError(f"n_planes={n_planes} not divisible by n_bands={n_bands}")
-    band_bits = n_planes // n_bands
-    mask = (1 << band_bits) - 1
-    v = F.col(vec_col)
-    embeddings.select(id_col, vec_col).write.mode("overwrite").parquet(
-        f"{path}/base"
-    )
+    slices = _band_slices(n_planes, n_bands)
+    embeddings.select(ID, VEC).write.mode("overwrite").parquet(f"{path}/base")
     band_structs = [
         F.struct(
             F.lit(i).alias("band"),
-            F.shiftrightunsigned(F.col("sig"), i * band_bits)
+            F.shiftrightunsigned(F.col("sig"), shift)
             .bitwiseAND(F.lit(mask).cast("long"))
             .alias("val"),
         )
-        for i in range(n_bands)
+        for i, (shift, mask) in enumerate(slices)
     ]
     (
-        embeddings.select(
-            id_col, sign_lsh_bits(v, n_planes, dim).alias("sig")
-        )
-        .select(id_col, "sig", F.explode(F.array(*band_structs)).alias("bv"))
-        .select(id_col, "sig", "bv.band", "bv.val")
+        embeddings.select(ID, sign_lsh_bits(F.col(VEC), n_planes, dim).alias("sig"))
+        .select(ID, "sig", F.explode(F.array(*band_structs)).alias("bv"))
+        .select(ID, "sig", "bv.band", "bv.val")
         .repartition("band", "val")
         .write.mode("overwrite")
         .partitionBy("band", "val")
@@ -480,9 +465,6 @@ def lsh_topk_banded(
     n_planes: int = 16,
     n_bands: int = 8,
     max_hamming: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-k over a banded multi-probe LSH index (:func:`lsh_band_write`
     output), exact vs :func:`lsh_topk` for max_hamming < n_bands.
@@ -500,41 +482,27 @@ def lsh_topk_banded(
             f"max_hamming={max_hamming} >= n_bands={n_bands}: the pigeonhole "
             "guarantee needs h < B (raise n_bands or use lsh_topk_indexed)"
         )
-    if dim is None:
-        dim = len(query_vec)
-    q_sig = sign_bits_py(query_vec, n_planes, dim)
-    band_bits = n_planes // n_bands
-    mask = (1 << band_bits) - 1
-    probe = None
-    for i in range(n_bands):
-        p = (F.col("band") == i) & (
-            F.col("val") == ((q_sig >> (i * band_bits)) & mask)
-        )
-        probe = p if probe is None else probe | p
+    q_sig = sign_bits_py(query_vec, n_planes)
+    probe = functools.reduce(
+        operator.or_,
+        [
+            (F.col("band") == i) & (F.col("val") == ((q_sig >> shift) & mask))
+            for i, (shift, mask) in enumerate(_band_slices(n_planes, n_bands))
+        ],
+    )
     cand = (
         spark.read.parquet(f"{path}/bands")
         .filter(probe)
-        .filter(F.bit_count(F.col("sig").bitwiseXOR(F.lit(q_sig))) <= max_hamming)
-        .select(id_col)
+        .filter(_within_hamming(q_sig, max_hamming))
+        .select(ID)
         .distinct()
     )
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        spark.read.parquet(f"{path}/base")
-        .join(F.broadcast(cand), id_col)
-        .select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    base = spark.read.parquet(f"{path}/base")
+    return brute_force_topk(base.join(F.broadcast(cand), ID), query_vec, k)
 
 
 def cosine_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.9,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
+    embeddings: DataFrame, threshold: float = 0.9, n_planes: int = 8, *, dim: int
 ) -> DataFrame:
     """Embedding near-dup pairs (id_a < id_b, cosine ≥ threshold).
 
@@ -545,14 +513,16 @@ def cosine_pairs(
     The verify cosine runs only on bucket-join survivors (O(candidates),
     not O(corpus)), so it keeps the dynamic-length HOF form — see the
     module docstring for why the scan paths don't."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col(VEC).cast("array<double>")
     with_sig = _persist(  # feeds both self-join sides — compute LSH bits once
         embeddings.select(
-            F.col(id_col).alias("vid"), v.alias("v"),
+            F.col(ID).alias("vid"), v.alias("v"),
             sign_lsh_bits(v, n_planes, dim).alias("sig"),
         )
     )
-    with_sig.count()  # eager: lazy cache would recompute on broadcast side
+    # no eager count(): the pairs action fills the cache for both sides
+    # (embedding_near_dups, sf0.1, local[4], six interleaved best-of-3
+    # pairs: median 2.19 s with a count, 1.70 s without)
     a = with_sig.select(
         F.col("vid").alias("id_a"), F.col("v").alias("v_a"), "sig"
     )
@@ -564,46 +534,6 @@ def cosine_pairs(
     return pairs.select(
         "id_a", "id_b", F.round(score, 6).alias("score")
     ).filter(F.col("score") >= threshold)
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 16,
-    max_hamming: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: prune candidates whose sign-LSH signature is
-    > max_hamming bits from the query's, exact-rescore the rest.
-
-    The query's signature folds to a driver-side integer literal
-    (:func:`sign_bits_py` — exact same arithmetic), so the per-row work
-    is one matmul-UDF signature + a codegen'd bit_count. On a
-    materialized index (:func:`lsh_write`) even the signature disappears
-    — see :func:`lsh_topk_indexed`. At 10^12 rows the prune typically
-    keeps <1% of the table; the rescore is the same exact cosine as
-    brute force, so recall failures are visible by diffing against
-    ``brute_force_topk`` on a sample.
-    """
-    if dim is None:
-        dim = len(query_vec)
-    q_sig = sign_bits_py(query_vec, n_planes, dim)
-    v = F.col(vec_col)
-    with_sig = embeddings.select(
-        F.col(id_col), v.alias("v"), sign_lsh_bits(v, n_planes, dim).alias("sig")
-    )
-    pruned = with_sig.filter(
-        F.bit_count(F.col("sig").bitwiseXOR(F.lit(q_sig))) <= max_hamming
-    )
-    score = cosine_to_query(F.col("v"), query_vec)
-    return (
-        pruned.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
 
 
 # ── Product quantization (PQ / ADC) ────────────────────────────────────
@@ -678,39 +608,30 @@ def pq_train(
     return out
 
 
-_PQ_UDF_CACHE: dict = {}
+@functools.lru_cache(maxsize=None)
+def _pq_encode_udf(m: int, n_codes: int, dim: int, codebook: bytes | None):
+    dsub = dim // m
+    CB = (
+        pq_codebook_int(m, n_codes, dim)
+        if codebook is None
+        else np.frombuffer(codebook, dtype=np.int64).reshape(m, n_codes, dsub)
+    )
 
+    @F.pandas_udf("array<int>")
+    def enc(s: pd.Series) -> pd.Series:
+        ok, V = _rows_matrix(s, dim)
+        rows = np.full(len(s), None, dtype=object)
+        vsub = _quantize(V).reshape(len(ok), m, 1, dsub)
+        # (n, m, k): exact integer distances; argmin takes the
+        # FIRST minimum — ties to the lowest code, same as the
+        # oracle's ORDER BY d2, code
+        d2 = ((vsub - CB[None, :, :, :]) ** 2).sum(axis=3)
+        codes = np.argmin(d2, axis=2).astype(np.int32)
+        for j, i in enumerate(ok):
+            rows[i] = codes[j].tolist()
+        return pd.Series(rows, dtype=object)
 
-def _pq_encode_udf(m: int, n_codes: int, dim: int, codebook: np.ndarray | None):
-    key = (m, n_codes, dim, None if codebook is None else codebook.tobytes())
-    if key not in _PQ_UDF_CACHE:
-        CB = pq_codebook_int(m, n_codes, dim) if codebook is None else codebook
-        dsub = dim // m
-
-        @F.pandas_udf("array<int>")
-        def enc(s: pd.Series) -> pd.Series:
-            n = len(s)
-            arr = s.to_numpy()
-            lens = np.fromiter(
-                (0 if x is None else len(x) for x in arr), dtype=np.int64, count=n
-            )
-            ok = np.flatnonzero(lens == dim)
-            rows = np.full(n, None, dtype=object)
-            if ok.size:
-                V = np.vstack([arr[i] for i in ok]).astype(np.float64)
-                vint = np.floor(V * 1_000_000.0).astype(np.int64)
-                vsub = vint.reshape(len(ok), m, 1, dsub)
-                # (n, m, k): exact integer distances; argmin takes the
-                # FIRST minimum — ties to the lowest code, same as the
-                # oracle's ORDER BY d2, code
-                d2 = ((vsub - CB[None, :, :, :]) ** 2).sum(axis=3)
-                codes = np.argmin(d2, axis=2).astype(np.int32)
-                for j, i in enumerate(ok):
-                    rows[i] = codes[j].tolist()
-            return pd.Series(rows, dtype=object)
-
-        _PQ_UDF_CACHE[key] = enc
-    return _PQ_UDF_CACHE[key]
+    return enc
 
 
 def pq_encode(
@@ -718,16 +639,40 @@ def pq_encode(
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
-    vec_col: str = "embedding",
     codebook: np.ndarray | None = None,
 ) -> DataFrame:
     """Append ``pq_codes`` (array<int>, length m; null for wrong-length
     vectors): per subspace, the integer-exact nearest codeword. Zero
     shuffle — at write time a production table stores this column
     (32× smaller than the raw vectors) and ADC queries scan only it."""
+    key = None if codebook is None else np.asarray(codebook, np.int64).tobytes()
     return embeddings.withColumn(
-        "pq_codes", _pq_encode_udf(m, n_codes, dim, codebook)(F.col(vec_col))
+        "pq_codes", _pq_encode_udf(m, n_codes, dim, key)(F.col(VEC))
     )
+
+
+def _pq_probe(
+    codes: DataFrame, vectors: DataFrame, query_vec: list[float], k: int,
+    m: int, n_codes: int, refine: int, codebook: np.ndarray | None,
+) -> DataFrame:
+    """PQ-ADC probe: m literal distance-table lookups over ``codes``'
+    ``pq_codes``, TakeOrdered k×refine over (id, _adc), exact re-rank of
+    those ids broadcast-joined to ``vectors``."""
+    dim = len(query_vec)
+    CB = pq_codebook_int(m, n_codes, dim) if codebook is None else codebook
+    qint = _quantize(np.asarray(query_vec, dtype=np.float64)).reshape(m, 1, dim // m)
+    T = ((qint - CB) ** 2).sum(axis=2)  # (m, n_codes) int64
+    approx = functools.reduce(operator.add, [
+        F.array(*[F.lit(int(T[s, c])) for c in range(n_codes)])[F.col("pq_codes")[s]]
+        for s in range(m)
+    ])
+    cand = (
+        codes.select(ID, approx.alias("_adc"))
+        .orderBy(F.asc("_adc"), F.col(ID))
+        .limit(k * refine)
+        .select(ID)
+    )
+    return brute_force_topk(vectors.join(F.broadcast(cand), ID), query_vec, k)
 
 
 def pq_topk(
@@ -736,10 +681,7 @@ def pq_topk(
     k: int = 10,
     m: int = 8,
     n_codes: int = 16,
-    dim: int = 64,
     refine: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: np.ndarray | None = None,
 ) -> DataFrame:
     """PQ-ADC top-k with exact re-rank: score every row by the sum of m
@@ -761,44 +703,16 @@ def pq_topk(
     asserted by test_pq_indexed_no_encode_recompute. Approximation
     quality rides the codebook: LCG default for engine-replayable
     tests, :func:`pq_train` output for production."""
-    CB = pq_codebook_int(m, n_codes, dim) if codebook is None else codebook
-    dsub = dim // m
-    qint = np.floor(np.asarray(query_vec, dtype=np.float64) * 1_000_000.0).astype(
-        np.int64
-    ).reshape(m, 1, dsub)
-    T = ((qint - CB) ** 2).sum(axis=2)  # (m, n_codes) int64
+    dim = len(query_vec)
     # Wrong-length vectors are pruned with a cheap JVM size() filter
     # BEFORE the encode — filtering on isnotnull(pq_codes) instead
     # makes ExtractPythonUDFs materialize the encode kernel TWICE (once
     # under the pushed-down filter, once for the ADC projection); the
     # duplicated-UDF plan was caught by the indexed-vs-inline plan pin.
     coded = pq_encode(
-        embeddings.filter(F.size(F.col(vec_col)) == dim),
-        m,
-        n_codes,
-        dim,
-        vec_col,
-        codebook,
+        embeddings.filter(F.size(F.col(VEC)) == dim), m, n_codes, dim, codebook
     )
-    tables = [
-        F.array(*[F.lit(int(T[s, c])) for c in range(n_codes)]) for s in range(m)
-    ]
-    approx = tables[0][F.col("pq_codes")[0]]
-    for s in range(1, m):
-        approx = approx + tables[s][F.col("pq_codes")[s]]
-    cand = (
-        coded.select(id_col, approx.alias("_adc"))
-        .orderBy(F.asc("_adc"), F.col(id_col))
-        .limit(k * refine)
-        .select(id_col)
-    )
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        embeddings.join(F.broadcast(cand), id_col)
-        .select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    return _pq_probe(coded, embeddings, query_vec, k, m, n_codes, refine, codebook)
 
 
 def pq_write(
@@ -806,8 +720,8 @@ def pq_write(
     path: str,
     m: int = 8,
     n_codes: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
+    *,
+    dim: int,
     codebook: np.ndarray | None = None,
 ) -> None:
     """Materialize the PQ index: embeddings written WITH their
@@ -819,7 +733,7 @@ def pq_write(
     scans — 32× less I/O than the vector column, which columnar
     projection skips entirely until the re-rank."""
     (
-        pq_encode(embeddings, m, n_codes, dim, vec_col, codebook)
+        pq_encode(embeddings, m, n_codes, dim, codebook)
         .write.mode("overwrite")
         .parquet(path)
     )
@@ -832,10 +746,7 @@ def pq_topk_indexed(
     k: int = 10,
     m: int = 8,
     n_codes: int = 16,
-    dim: int = 64,
     refine: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: np.ndarray | None = None,
 ) -> DataFrame:
     """PQ-ADC top-k over a materialized index (:func:`pq_write`
@@ -847,32 +758,8 @@ def pq_topk_indexed(
     pinned by test_pq_candidate_scan_never_reads_vectors), then a
     broadcast join back on id fetches the ≤ k×refine candidate vectors
     for the exact re-rank."""
-    CB = pq_codebook_int(m, n_codes, dim) if codebook is None else codebook
-    dsub = dim // m
-    qint = np.floor(
-        np.asarray(query_vec, dtype=np.float64) * 1_000_000.0
-    ).astype(np.int64).reshape(m, 1, dsub)
-    T = ((qint - CB) ** 2).sum(axis=2)
-    tables = [
-        F.array(*[F.lit(int(T[s, c])) for c in range(n_codes)]) for s in range(m)
-    ]
-    approx = tables[0][F.col("pq_codes")[0]]
-    for s in range(1, m):
-        approx = approx + tables[s][F.col("pq_codes")[s]]
-    cand = (
-        spark.read.parquet(path)
-        .filter(F.col("pq_codes").isNotNull())
-        .select(id_col, approx.alias("_adc"))
-        .orderBy(F.asc("_adc"), F.col(id_col))
-        .limit(k * refine)
-        .select(id_col)
-    )
-    score = cosine_to_query(F.col(vec_col), query_vec)
-    return (
-        spark.read.parquet(path)
-        .select(id_col, vec_col)
-        .join(F.broadcast(cand), id_col)
-        .select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
+    index = spark.read.parquet(path)
+    codes = index.filter(F.col("pq_codes").isNotNull())
+    return _pq_probe(
+        codes, index.select(ID, VEC), query_vec, k, m, n_codes, refine, codebook
     )

@@ -39,45 +39,21 @@ DEC6 = "decimal(18,6)"
 def load(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
-    """Read one input table. ``spread=True`` requests scale-adaptive
-    scan parallelism (r7, guide §2.5 "input skew"): the sf-scale tables
-    are single parquet files with ONE row group, so byte-range splitting
-    cannot parallelize them — a documents scan runs 1-2 effective tasks
-    no matter the core count, serializing every regex/kernel-heavy
-    corpus pass behind it (measured: gopher_filter 2.08 s → 0.53 s at
-    sf1.0 / local[32] after spreading). The round-robin repartition is
-    applied ONLY when the scan's natural partitioning is below the
-    session's parallelism, so a production table laid out in real
-    128 MB-1 GB files keeps its (already parallel) natural partitioning
-    and pays nothing. Queries whose plans are pinned Exchange-free
-    (repetition_scores, pii_redact) keep the default."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Read one input table. ``spread=True`` (``documents`` only) reads it
+    through ``extraction.load_documents(spread=True)``: the sf-scale
+    tables are single parquet files with ONE row group, so byte-range
+    splitting cannot parallelize them, and a documents scan would run 1-2
+    effective tasks no matter the core count (measured: gopher_filter
+    2.08 s → 0.53 s at sf1.0 / local[32] after spreading). The table is
+    hash-partitioned by doc_id only when its scan has fewer splits than
+    the session's parallelism and it holds ``extraction.SPREAD_MIN_BYTES``
+    (shut at sf0.1, 0.6 MB; open at sf1.0, 5.6 MB). Queries whose plans
+    are pinned Exchange-free (repetition_scores, pii_redact) keep the
+    default."""
+    path = f"{sf_dir}/{name}.parquet"
     if spread:
-        # size gate: below a few MB the round-robin exchange costs more
-        # than the residual single-task compute it parallelizes
-        # (interleaved A/B at sf0.1, 0.6 MB: word_index 0.47→0.71 s,
-        # heavy_hitters 0.97→1.33 s WITH an ungated spread; sf1.0,
-        # 5.6 MB: word_index 2.0→1.0 s, extract_spans 7.3→1.5 s with
-        # it). Production-scale tables pass the gate trivially and are
-        # instead excluded by the partition-count check.
-        import os
-
-        path = f"{sf_dir}/{name}.parquet"
-        size = (
-            sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-            )
-            if os.path.isdir(path)
-            else os.path.getsize(path)
-        )
-        min_bytes = int(
-            os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", 4 * 1024 * 1024)
-        )
-        par = spark.sparkContext.defaultParallelism
-        if size >= min_bytes and df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
-    return df
+        return extraction.load_documents(spark, path, spread=True)
+    return spark.read.parquet(path)
 
 
 # ════════════════════════════════════════════════════════════════════════
@@ -378,9 +354,6 @@ GROUP BY event_type, date_trunc('hour', ts)
 """
 
 
-_STREAM_SINK_SEQ = [0]
-
-
 def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming at the driver correctness gate: the
     watermarked hourly rollup (streaming/incremental.py) drained as a
@@ -394,17 +367,10 @@ def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = incremental.stream_event_counts(
         spark, sf_dir, window="1 hour", glob="events.parquet"
     )
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"stream_events_hourly_sink_{_STREAM_SINK_SEQ[0]}"
-    (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    out = incremental.run_stream_to_memory(
+        stream, "stream_events_hourly_sink", "complete"
     )
-    return spark.table(name).select(
+    return out.select(
         "event_type",
         F.col("window_start").alias("hour"),
         "n_events",
@@ -421,7 +387,7 @@ def q_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow batch 'first' is min(doc_id) by the operator's sorted
     scan — deterministic, so the oracle is exact."""
     from barks_ocr_spark.operators.textstats import canonical_text
-    from barks_ocr_spark.streaming import stateful
+    from barks_ocr_spark.streaming import incremental, stateful
 
     docs = (
         spark.readStream.schema(
@@ -437,17 +403,7 @@ def q_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(canonical_text(F.col("text"))).alias("fp"),
     )
     out = stateful.stream_first_per_fingerprint(doubled)
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"stream_dedup_sink_{_STREAM_SINK_SEQ[0]}"
-    (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return spark.table(name)
+    return incremental.run_stream_to_memory(out, "stream_dedup_sink", "append")
 
 
 def q_stream_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,7 +414,7 @@ def q_stream_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted set is every session except each user's still-open last —
     which the batch SQL replays exactly (same integer-µs gap rule as
     event_sessions)."""
-    from barks_ocr_spark.streaming import stateful
+    from barks_ocr_spark.streaming import incremental, stateful
 
     ev = (
         spark.readStream.schema(
@@ -474,17 +430,7 @@ def q_stream_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
     )
     out = stateful.stream_sessionize(ev)
-    _STREAM_SINK_SEQ[0] += 1
-    name = f"stream_sessions_sink_{_STREAM_SINK_SEQ[0]}"
-    (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return spark.table(name)
+    return incremental.run_stream_to_memory(out, "stream_sessions_sink", "append")
 
 
 _SQL_STREAM_EVENT_SESSIONS = """
@@ -2085,7 +2031,7 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are both checked, not just recall."""
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
     return simsearch.lsh_topk(
-        emb, _query_vec(spark, sf_dir), k=10, n_planes=16, max_hamming=6, dim=64
+        emb, _query_vec(spark, sf_dir), k=10, n_planes=16, max_hamming=6
     )
 
 
@@ -2139,7 +2085,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     list prune is checked, not just recall."""
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
     return simsearch.ivf_topk(
-        emb, _query_vec(spark, sf_dir), k=10, n_centroids=16, nprobe=4, dim=64
+        emb, _query_vec(spark, sf_dir), k=10, n_centroids=16, nprobe=4
     )
 
 
@@ -2251,7 +2197,7 @@ def q_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as pq_topk — write-time vs read-time encoding must agree."""
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
     path = _index_dir(sf_dir, "pq")
-    simsearch.pq_write(emb, path)
+    simsearch.pq_write(emb, path, dim=64)
     return simsearch.pq_topk_indexed(spark, path, _query_vec(spark, sf_dir), k=10)
 
 
@@ -2275,7 +2221,7 @@ def q_pq_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cb = simsearch.pq_train(sample, m=8, n_codes=16, seed=7)
     path = _index_dir(sf_dir, "pqtrained")
-    simsearch.pq_write(emb, path, codebook=cb)
+    simsearch.pq_write(emb, path, dim=64, codebook=cb)
     return simsearch.pq_topk_indexed(
         spark, path, _query_vec(spark, sf_dir), k=10, codebook=cb
     )
@@ -2290,7 +2236,7 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete here and the exact O(n²) SQL is a full oracle."""
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     twin = emb.select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding")
-    return simsearch.cosine_pairs(emb.unionAll(twin), threshold=0.99)
+    return simsearch.cosine_pairs(emb.unionAll(twin), threshold=0.99, dim=64)
 
 
 _SQL_EMBEDDING_NEAR_DUPS = """

@@ -3,12 +3,12 @@
 The reference is batch-with-resume (SURVEY.md §2.9); the streaming
 module gives the same pipelines continuous semantics:
 
-- ``stream_extraction``: readStream over a docs directory → the same
-  stateless per-document kernel (mapInPandas works unchanged on
-  streaming DataFrames) → writeStream with exactly-once file sink +
-  checkpointLocation. The repeated-heading set must be precomputed
-  (from a batch pass or a curated list) — a streaming-global distinct
-  aggregate would need its own stateful query.
+- ``stream_extraction``: readStream over a docs directory → pass 2 of
+  ``extraction.extract`` (the same mapInArrow kernel as the batch job;
+  mapInArrow runs unchanged on streaming DataFrames) → writeStream with
+  exactly-once file sink + checkpointLocation. The repeated-heading set
+  must be precomputed (from a batch pass or a curated list) — a
+  streaming-global distinct aggregate would need its own stateful query.
 - ``stream_event_counts``: watermarked tumbling-window aggregation over
   the events table shape (ts, event_type, value) — late data handled by
   the watermark, state bounded.
@@ -16,13 +16,12 @@ module gives the same pipelines continuous semantics:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import itertools
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from barks_ocr_spark.kernels import spans as span_kernel
+from barks_ocr_spark.operators import extraction
 from barks_ocr_spark.schemas import DOCUMENTS_SPANS_SCHEMA
 
 
@@ -36,15 +35,7 @@ def stream_extraction(
     reader = spark.readStream.schema(DOCUMENTS_SPANS_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir)
-    bc = spark.sparkContext.broadcast(repeating)
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rep = bc.value
-        for batch in batches:
-            yield span_kernel.extract_documents(batch, rep)
-
-    return docs.mapInPandas(_gen, DOCUMENTS_SPANS_SCHEMA)
+    return extraction.extract(reader.parquet(input_dir), repeating=repeating)
 
 
 def run_stream_to_parquet(
@@ -59,6 +50,25 @@ def run_stream_to_parquet(
         .start()
         .awaitTermination()
     )
+
+
+_MEMORY_SINK_IDS = itertools.count(1)
+
+
+def run_stream_to_memory(stream: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Drain all available input into a memory sink and return the
+    sink's table. Each call gets a fresh ``<name>_<n>`` query name, so
+    a table returned earlier keeps its own sink."""
+    table = f"{name}_{next(_MEMORY_SINK_IDS)}"
+    (
+        stream.writeStream.format("memory")
+        .queryName(table)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return stream.sparkSession.table(table)
 
 
 def stream_event_counts(

@@ -9,13 +9,16 @@ Usage:
 `time` mirrors bench.py's methodology exactly (df.count(), best-of-N,
 operator caches released between runs) so numbers are comparable to the
 driver's BENCH_rNN windows. `plan` writes .explain("formatted") to
-plans/r07/<query>_<tag>.txt for the plan-pin deliverable.
+plans/r07/<query>_<tag>.txt for the plan-pin deliverable, with expression
+ids (`#123`, `#45L`), exchange `plan_id`s and `pythonUDF<n>` indices
+stripped, so a `diff` of two tags is empty when the plans match.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -60,6 +63,14 @@ def cmd_time(names: list[str], sf_dir: str, n_runs: int) -> None:
     spark.stop()
 
 
+def normalize_plan(txt: str) -> str:
+    """Drop the ids Spark numbers per session: expression ids, exchange
+    plan ids and the indices of extracted Python UDF results."""
+    txt = re.sub(r"#\d+L?", "", txt)
+    txt = re.sub(r"plan_id=\d+", "plan_id=", txt)
+    return re.sub(r"pythonUDF\d+", "pythonUDF", txt)
+
+
 def cmd_plan(names: list[str], sf_dir: str, tag: str) -> None:
     from barks_ocr_spark.plans import queries as Q
 
@@ -72,7 +83,7 @@ def cmd_plan(names: list[str], sf_dir: str, tag: str) -> None:
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        (dest / f"{name}_{tag}.txt").write_text(txt)
+        (dest / f"{name}_{tag}.txt").write_text(normalize_plan(txt))
         print(f"wrote plans/r07/{name}_{tag}.txt")
     spark.stop()
 

@@ -44,7 +44,8 @@ def _read(name: str) -> pd.DataFrame:
 
 def _write(df: pd.DataFrame, dest: Path, name: str) -> None:
     # one file, one row group — the same layout the driver ships (the
-    # spread gate in loaders.load() is what handles it at query time)
+    # spread gate of queries.load(spread=True), i.e.
+    # extraction.load_documents, is what handles it at query time)
     pq.write_table(
         pa.Table.from_pandas(df, preserve_index=False),
         dest / f"{name}.parquet",

@@ -32,3 +32,21 @@ def test_corrected_vs_prev_degrades_gracefully(tmp_path, monkeypatch):
     bad.write_text('{"parsed": {"queries": {}}}')
     out = bench._corrected_vs_prev({"a": 1.0}, {"kernel_docs_per_sec": 1})
     assert out["status"].startswith("prior-unreadable")
+
+
+def test_plan_normalization_drops_session_ids():
+    import bench_extra
+
+    a = (
+        "Project [vec_id#12L, round(pythonUDF0#40, 6) AS score#41]\n"
+        "Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=87]"
+    )
+    b = (
+        "Project [vec_id#7L, round(pythonUDF3#99, 6) AS score#100]\n"
+        "Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=12]"
+    )
+    assert bench_extra.normalize_plan(a) == bench_extra.normalize_plan(b)
+    assert bench_extra.normalize_plan(a) == (
+        "Project [vec_id, round(pythonUDF, 6) AS score]\n"
+        "Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=]"
+    )

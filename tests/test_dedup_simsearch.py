@@ -233,9 +233,7 @@ def test_ivf_full_probe_equals_brute_force(spark):
     # probing every cell degrades IVF gracefully to exact brute force
     full = [
         r["vec_id"]
-        for r in simsearch.ivf_topk(
-            emb, q, k=3, n_centroids=8, nprobe=8, dim=4
-        ).collect()
+        for r in simsearch.ivf_topk(emb, q, k=3, n_centroids=8, nprobe=8).collect()
     ]
     assert full == bf
 
@@ -245,7 +243,7 @@ def test_ivf_probe_prunes_to_query_cells(spark):
     q = [1.0, 0.0, 0.0, 0.0]
     probe = simsearch.ivf_probe_cells(q, n_centroids=8, nprobe=2)
     assert len(probe) == 2 and len(set(probe)) == 2
-    out = simsearch.ivf_topk(emb, q, k=10, n_centroids=8, nprobe=2, dim=4)
+    out = simsearch.ivf_topk(emb, q, k=10, n_centroids=8, nprobe=2)
     from pyspark.sql import functions as SF
 
     cells = (
@@ -262,10 +260,16 @@ def test_ivf_probe_prunes_to_query_cells(spark):
 
 
 def test_cosine_pairs_identical_vectors(spark):
-    out = simsearch.cosine_pairs(_embeddings(spark), threshold=0.95).collect()
+    emb = _embeddings(spark)
+    out = simsearch.cosine_pairs(emb, threshold=0.95, dim=4).collect()
     pairs = {(r["id_a"], r["id_b"]): r["score"] for r in out}
     assert pairs[(0, 3)] == 1.0
     assert all(not (a == 0 and b == 4) for a, b in pairs)  # opposite vector
+    # the 4-dim vectors spread over more than one signature bucket: at a
+    # threshold every pair passes, the bucketed self-join yields fewer
+    # than all C(6, 2) = 15 pairs (vectors of a length other than ``dim``
+    # all get signature 0 and would pair up in one bucket)
+    assert simsearch.cosine_pairs(emb, threshold=-1.0, dim=4).count() < 15
 
 
 def test_ivf_indexed_matches_on_the_fly(spark, tmp_path):
@@ -273,7 +277,7 @@ def test_ivf_indexed_matches_on_the_fly(spark, tmp_path):
     path = str(tmp_path / "ivf_idx")
     simsearch.ivf_write(emb, path, n_centroids=8, dim=4)
     q = [1.0, 0.0, 0.0, 0.0]
-    direct = simsearch.ivf_topk(emb, q, k=4, n_centroids=8, nprobe=3, dim=4)
+    direct = simsearch.ivf_topk(emb, q, k=4, n_centroids=8, nprobe=3)
     indexed = simsearch.ivf_topk_indexed(spark, path, q, k=4, n_centroids=8, nprobe=3)
     assert sorted(map(tuple, indexed.collect())) == sorted(map(tuple, direct.collect()))
 
@@ -386,7 +390,7 @@ def test_pq_trained_codebook_end_to_end(spark, tmp_path):
     )
     cb = simsearch.pq_train(sample, m=8, n_codes=16, seed=7)
     path = str(tmp_path / "pqtrained")
-    simsearch.pq_write(emb, path, codebook=cb)
+    simsearch.pq_write(emb, path, dim=64, codebook=cb)
     indexed = simsearch.pq_topk_indexed(spark, path, q, k=10, codebook=cb)
     inline = simsearch.pq_topk(emb, q, k=10, codebook=cb)
     got = [tuple(r) for r in indexed.collect()]
@@ -641,7 +645,7 @@ def test_pq_indexed_no_encode_recompute(spark, tmp_path):
         for x in _emb_table(spark).filter("vec_id = 0").first()["embedding"]
     ]
     path = str(tmp_path / "pqidx")
-    simsearch.pq_write(emb, path)
+    simsearch.pq_write(emb, path, dim=64)
     out = simsearch.pq_topk_indexed(spark, path, q, k=10)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the exact-cosine rescore is the ONLY Arrow stage: the encode ran
@@ -668,7 +672,7 @@ def test_pq_candidate_scan_never_reads_vectors(spark, tmp_path):
         for x in _emb_table(spark).filter("vec_id = 0").first()["embedding"]
     ]
     path = str(tmp_path / "pqidx")
-    simsearch.pq_write(emb, path)
+    simsearch.pq_write(emb, path, dim=64)
     out = simsearch.pq_topk_indexed(spark, path, q, k=10)
     plan = out._jdf.queryExecution().executedPlan().toString()
     schemas = [
