@@ -200,7 +200,7 @@ def _sig_udf(n_planes: int, dim: int):
     return sig
 
 
-def sign_lsh_bits(vec: Column, n_planes: int = 16, dim: int = 64) -> Column:
+def sign_lsh_bits(vec: Column, n_planes: int = 16, *, dim: int) -> Column:
     """Sign-LSH signature column: bit p = 1 iff Σ_d w[p][d]·⌊v[d]·1e6⌋ > 0.
 
     Two deliberate choices make this cross-engine exact (and thus fully
@@ -245,7 +245,7 @@ def _cell_udf(n_centroids: int, dim: int):
     return cell
 
 
-def ivf_cell(vec: Column, n_centroids: int = 16, dim: int = 64) -> Column:
+def ivf_cell(vec: Column, n_centroids: int = 16, *, dim: int) -> Column:
     """IVF-flat cell assignment: argmax_c ⟨⌊v·1e6⌋, centroid_c⟩, ties to
     the lowest cell id (0-based); null for vectors of the wrong length.
 
@@ -295,7 +295,7 @@ def ivf_topk(
     final TakeOrdered. With nprobe = n_centroids it degrades gracefully
     to exact brute force (pinned by test_ivf_full_probe_equals_brute_force).
     """
-    cell = ivf_cell(F.col(VEC), n_centroids, len(query_vec))
+    cell = ivf_cell(F.col(VEC), n_centroids, dim=len(query_vec))
     return _ivf_probe(
         embeddings.withColumn("cell", cell), query_vec, k, n_centroids, nprobe
     )
@@ -314,7 +314,7 @@ def ivf_write(
     shuffle partition rather than every task writing every cell.
     """
     (
-        embeddings.withColumn("cell", ivf_cell(F.col(VEC), n_centroids, dim))
+        embeddings.withColumn("cell", ivf_cell(F.col(VEC), n_centroids, dim=dim))
         .repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -366,7 +366,7 @@ def lsh_topk(
     brute force, so recall failures are visible by diffing against
     ``brute_force_topk`` on a sample.
     """
-    sig = sign_lsh_bits(F.col(VEC), n_planes, len(query_vec))
+    sig = sign_lsh_bits(F.col(VEC), n_planes, dim=len(query_vec))
     return _lsh_probe(
         embeddings.withColumn("sig", sig), query_vec, k, n_planes, max_hamming
     )
@@ -390,7 +390,7 @@ def lsh_write(
     slivers; this single-table form keeps storage 1×.
     """
     (
-        embeddings.withColumn("sig", sign_lsh_bits(F.col(VEC), n_planes, dim))
+        embeddings.withColumn("sig", sign_lsh_bits(F.col(VEC), n_planes, dim=dim))
         .write.mode("overwrite")
         .parquet(path)
     )
@@ -447,7 +447,7 @@ def lsh_band_write(
         for i, (shift, mask) in enumerate(slices)
     ]
     (
-        embeddings.select(ID, sign_lsh_bits(F.col(VEC), n_planes, dim).alias("sig"))
+        embeddings.select(ID, sign_lsh_bits(F.col(VEC), n_planes, dim=dim).alias("sig"))
         .select(ID, "sig", F.explode(F.array(*band_structs)).alias("bv"))
         .select(ID, "sig", "bv.band", "bv.val")
         .repartition("band", "val")
@@ -517,7 +517,7 @@ def cosine_pairs(
     with_sig = _persist(  # feeds both self-join sides — compute LSH bits once
         embeddings.select(
             F.col(ID).alias("vid"), v.alias("v"),
-            sign_lsh_bits(v, n_planes, dim).alias("sig"),
+            sign_lsh_bits(v, n_planes, dim=dim).alias("sig"),
         )
     )
     # no eager count(): the pairs action fills the cache for both sides
@@ -638,7 +638,8 @@ def pq_encode(
     embeddings: DataFrame,
     m: int = 8,
     n_codes: int = 16,
-    dim: int = 64,
+    *,
+    dim: int,
     codebook: np.ndarray | None = None,
 ) -> DataFrame:
     """Append ``pq_codes`` (array<int>, length m; null for wrong-length
@@ -710,7 +711,7 @@ def pq_topk(
     # under the pushed-down filter, once for the ADC projection); the
     # duplicated-UDF plan was caught by the indexed-vs-inline plan pin.
     coded = pq_encode(
-        embeddings.filter(F.size(F.col(VEC)) == dim), m, n_codes, dim, codebook
+        embeddings.filter(F.size(F.col(VEC)) == dim), m, n_codes, dim=dim, codebook=codebook
     )
     return _pq_probe(coded, embeddings, query_vec, k, m, n_codes, refine, codebook)
 
@@ -733,7 +734,7 @@ def pq_write(
     scans — 32× less I/O than the vector column, which columnar
     projection skips entirely until the re-rank."""
     (
-        pq_encode(embeddings, m, n_codes, dim, codebook)
+        pq_encode(embeddings, m, n_codes, dim=dim, codebook=codebook)
         .write.mode("overwrite")
         .parquet(path)
     )

@@ -59,14 +59,15 @@ def get_spark(
     Args:
         app_name: Spark application name.
         master: Spark master URL. Defaults to ``local[$SPARK_GRAFT_CPUS]``
-            locally; on a real cluster leave unset and let spark-submit
-            provide it.
+            locally, or to the cores this process may run on when the
+            variable is unset; on a real cluster leave unset and let
+            spark-submit provide it.
         shuffle_partitions: Shuffle parallelism. At 100 TB this should be
             sized so post-shuffle partitions are ~128-256 MB (AQE coalesces
             down automatically); locally defaults to the core count.
         extra_conf: Extra Spark conf entries to apply.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -5,6 +5,7 @@ Usage:
     python bench_extra.py time q1 q2 ...   [--sf /root/testdata/sf1.0] [--n 2]
     python bench_extra.py plan q1 q2 ...   [--sf ...] [--tag before]
     python bench_extra.py time-all         [--sf ...]
+    python bench_extra.py pyfloor          [--n 10]
 
 `time` mirrors bench.py's methodology exactly (df.count(), best-of-N,
 operator caches released between runs) so numbers are comparable to the
@@ -12,12 +13,14 @@ driver's BENCH_rNN windows. `plan` writes .explain("formatted") to
 plans/r07/<query>_<tag>.txt for the plan-pin deliverable, with expression
 ids (`#123`, `#45L`), exchange `plan_id`s and `pythonUDF<n>` indices
 stripped, so a `diff` of two tags is empty when the plans match.
+`pyfloor` prints the per-job floor of a Python crossing on this host:
+medians of a 4-partition no-op `mapInArrow` job, of the same job without
+Python, and of `importlib.invalidate_caches()` timed inside a worker.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import re
 import sys
 import time
@@ -31,10 +34,7 @@ REPO = Path(__file__).resolve().parent
 def _spark():
     from barks_ocr_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        "bench-extra", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
+    spark = get_spark("bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -88,11 +88,58 @@ def cmd_plan(names: list[str], sf_dir: str, tag: str) -> None:
     spark.stop()
 
 
+def _noop_batches(batches):
+    import barks_ocr_spark  # noqa: F401  (imported as by every package kernel)
+
+    yield from batches
+
+
+def _invalidate_caches_s(batches):
+    import importlib
+
+    import pyarrow as pa
+
+    import barks_ocr_spark  # noqa: F401
+
+    for _ in batches:
+        pass
+    t0 = time.perf_counter()
+    importlib.invalidate_caches()
+    yield pa.RecordBatch.from_pydict({"s": [time.perf_counter() - t0]})
+
+
+def cmd_pyfloor(n_runs: int) -> None:
+    import statistics
+
+    spark = _spark()
+    df = spark.range(0, 4, numPartitions=4)
+    jobs = {
+        "python_job_s": lambda: df.mapInArrow(_noop_batches, df.schema).collect(),
+        "jvm_job_s": lambda: df.collect(),
+    }
+    probe = df.mapInArrow(_invalidate_caches_s, "s double")
+    for job in (*jobs.values(), probe.collect):  # warm the JVM and the workers
+        job()
+    out: dict[str, float] = {}
+    for name, job in jobs.items():
+        samples = []
+        for _ in range(n_runs):
+            t0 = time.perf_counter()
+            job()
+            samples.append(time.perf_counter() - t0)
+        out[name] = round(statistics.median(samples), 4)
+    in_worker = [r.s for _ in range(n_runs) for r in probe.collect()]
+    out["invalidate_caches_s"] = round(statistics.median(in_worker), 5)
+    out["runs"] = n_runs
+    print(json.dumps(out))
+    spark.stop()
+
+
 def main() -> None:
     args = sys.argv[1:]
     cmd = args.pop(0)
     sf_dir = "/root/testdata/sf1.0"
-    n_runs = 2
+    n_runs = 0
     tag = "before"
     names: list[str] = []
     i = 0
@@ -110,13 +157,15 @@ def main() -> None:
             names.append(args[i])
             i += 1
     if cmd == "time":
-        cmd_time(names, sf_dir, n_runs)
+        cmd_time(names, sf_dir, n_runs or 2)
     elif cmd == "time-all":
         import bench
 
-        cmd_time(bench.HEADLINE, sf_dir, n_runs)
+        cmd_time(bench.HEADLINE, sf_dir, n_runs or 2)
     elif cmd == "plan":
         cmd_plan(names, sf_dir, tag)
+    elif cmd == "pyfloor":
+        cmd_pyfloor(n_runs or 10)
     else:
         raise SystemExit(f"unknown command {cmd}")
 

@@ -250,7 +250,7 @@ def test_ivf_probe_prunes_to_query_cells(spark):
         emb.select(
             "vec_id",
             simsearch.ivf_cell(
-                SF.col("embedding").cast("array<double>"), 8, 4
+                SF.col("embedding").cast("array<double>"), 8, dim=4
             ).alias("cell"),
         )
         .collect()
@@ -412,7 +412,7 @@ def test_sign_bits_py_matches_column_form(spark):
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
         simsearch.sign_lsh_bits(
-            F.col("embedding").cast("array<double>"), 16, 4
+            F.col("embedding").cast("array<double>"), 16, dim=4
         ).alias("sig"),
     ).collect()
     for r in rows:
@@ -571,13 +571,13 @@ def test_pq_encode_shapes_and_nulls(spark):
         (3, None),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r["vec_id"]: r["pq_codes"] for r in simsearch.pq_encode(df).collect()}
+    out = {r["vec_id"]: r["pq_codes"] for r in simsearch.pq_encode(df, dim=64).collect()}
     assert len(out[1]) == 8 and all(0 <= c < 16 for c in out[1])
     assert out[2] is None and out[3] is None
     # deterministic across partitionings
     again = {
         r["vec_id"]: r["pq_codes"]
-        for r in simsearch.pq_encode(df.repartition(3)).collect()
+        for r in simsearch.pq_encode(df.repartition(3), dim=64).collect()
     }
     assert again == out
 
