@@ -434,12 +434,6 @@ def has_dash_no_spaces(s: pd.Series) -> pd.Series:
     return s.fillna("").str.contains(_DASH_NO_SPACES_RE.pattern, regex=True)
 
 
-def is_short_text(s: pd.Series) -> pd.Series:
-    """1-char text that isn't ``?`` or ``!`` (group_checks.py:60-63)."""
-    t = s.fillna("").str.strip().str.lower()
-    return (t.str.len() == 1) & ~t.isin(["?", "!"])
-
-
 # ════════════════════════════════════════════════════════════════════════
 # Comparison keys (T6/T7) — normalization used only for matching,
 # never applied to stored text (tools/florence_check.py:306-316).

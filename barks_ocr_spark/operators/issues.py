@@ -1,10 +1,10 @@
-"""Heuristic issue detection + the repair queue (SURVEY.md A4/A10/O2/O7).
+"""Heuristic issue detection (SURVEY.md A4/A10).
 
 The reference's `ocr_check` raises per-group dismissable issues
 (`src/barks_ocr/utils/group_checks.py:102-115`) and writes a deduped,
 sorted queue file for the human editor (`tools/compare.py:230-242`).
 Here: a DataFrame of (doc_id, issue_type) built from column predicates
-(all RE2-safe so the DuckDB oracle matches), plus the queue sink.
+(all RE2-safe so the DuckDB oracle matches).
 """
 
 from __future__ import annotations
@@ -75,11 +75,3 @@ def dodgy_group_predicate(
 def remove_dodgy_groups(groups: DataFrame) -> DataFrame:
     """F7: drop dodgy groups (pure column predicate — pushes to the scan)."""
     return groups.filter(~dodgy_group_predicate())
-
-
-def build_queue(issues: DataFrame) -> DataFrame:
-    """O2/O7 queue semantics: dedup on the composite key, stable sort
-    (`tools/compare.py:230-242`: sorted(set(lines)))."""
-    return issues.dropDuplicates(["doc_id", "issue_type"]).orderBy(
-        "doc_id", "issue_type"
-    )

@@ -6,6 +6,7 @@ Usage:
     python bench_extra.py plan q1 q2 ...   [--sf ...] [--tag before]
     python bench_extra.py time-all         [--sf ...]
     python bench_extra.py pyfloor          [--n 10]
+    python bench_extra.py codegen [q1 ...] [--sf ...]
 
 `time` mirrors bench.py's methodology exactly (df.count(), best-of-N,
 operator caches released between runs) so numbers are comparable to the
@@ -16,6 +17,11 @@ stripped, so a `diff` of two tags is empty when the plans match.
 `pyfloor` prints the per-job floor of a Python crossing on this host:
 medians of a 4-partition no-op `mapInArrow` job, of the same job without
 Python, and of `importlib.invalidate_caches()` timed inside a worker.
+`codegen` builds and counts each query twice (every registry query when
+none is named) and prints, per query, the generated sources the JVM
+compiled in each run: a second run that still compiles means the
+query's generated code differs from build to build, so the codegen
+cache cannot serve it.
 """
 
 from __future__ import annotations
@@ -135,6 +141,28 @@ def cmd_pyfloor(n_runs: int) -> None:
     spark.stop()
 
 
+def cmd_codegen(names: list[str], sf_dir: str) -> None:
+    from barks_ocr_spark.operators.cacheutil import unpersist_intermediates
+    from barks_ocr_spark.plans import queries as Q
+
+    spark = _spark()
+    qs = Q.queries()
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    out: dict[str, list[int]] = {}
+    for name in names or list(qs):
+        runs = []
+        for _ in range(2):
+            c0 = metrics.METRIC_COMPILATION_TIME().getCount()
+            qs[name](spark, sf_dir).count()
+            runs.append(metrics.METRIC_COMPILATION_TIME().getCount() - c0)
+            unpersist_intermediates()
+        out[name] = runs
+        print(json.dumps({name: runs}), flush=True)
+    recompiled = sorted(k for k, (_, second) in out.items() if second)
+    print(json.dumps({"sf": sf_dir, "compiles": out, "recompiled": recompiled}))
+    spark.stop()
+
+
 def main() -> None:
     args = sys.argv[1:]
     cmd = args.pop(0)
@@ -166,6 +194,8 @@ def main() -> None:
         cmd_plan(names, sf_dir, tag)
     elif cmd == "pyfloor":
         cmd_pyfloor(n_runs or 10)
+    elif cmd == "codegen":
+        cmd_codegen(names, sf_dir)
     else:
         raise SystemExit(f"unknown command {cmd}")
 

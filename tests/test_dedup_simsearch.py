@@ -195,6 +195,30 @@ def test_hot_shingle_cap_drops_boilerplate(spark):
     assert capped.count() == 0
 
 
+def _compiles(spark) -> int:
+    """Generated sources the JVM has compiled so far: each one a miss of
+    Spark's JVM-wide codegen cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_near_dup_operators_compile_once(spark):
+    # The three near-dup operators generate more distinct sources than
+    # Spark's default 100-entry codegen cache holds, so with that cache
+    # every rerun compiled most of them again.
+    def near_dups():
+        docs = _corpus(spark)
+        dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
+        dedup.minhash_near_duplicates(docs, threshold=0.8).collect()
+        dedup.simhash_near_duplicates(docs, max_hamming=3).collect()
+
+    c0 = _compiles(spark)
+    near_dups()
+    c1 = _compiles(spark)
+    near_dups()
+    assert _compiles(spark) - c1 <= 5, (c1 - c0, _compiles(spark) - c1)
+
+
 def _embeddings(spark):
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
