@@ -27,7 +27,7 @@ def main() -> None:
     p = argparse.ArgumentParser(description="barks_ocr_spark extraction job")
     p.add_argument("--input", required=True, help="interleaved docs parquet/table path")
     p.add_argument("--output", required=True, help="result snapshot-table path")
-    p.add_argument("--checkpoint", required=True, help="checkpoint-table path")
+    p.add_argument("--checkpoint", required=True, help="lineage rows of the --output commits")
     p.add_argument("--page-scans", default=None, help="optional page-scans table (J9)")
     p.add_argument(
         "--partitions",

@@ -13,15 +13,16 @@ its own id; each round every node takes the min of its own and its
 neighbors' labels; fixpoint in O(diameter) rounds. Each round is one
 shuffle join + one aggregate on the node id — no driver-side graph, no
 collect of nodes or edges; the only driver values are the per-round
-changed-row counts. Near-dup graphs have tiny diameters (dup clusters
-are near-cliques), so real corpora settle in 3-5 rounds; the pair
-tables are also orders of magnitude smaller than the corpus, so the
-loop runs on the small derived table, never the documents.
+changed-label counts, observed on each round's checkpoint. Near-dup
+graphs have tiny diameters (dup clusters are near-cliques), so real
+corpora settle in 3-5 rounds; the pair tables are also orders of
+magnitude smaller than the corpus, so the loop runs on the small
+derived table, never the documents.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from barks_ocr_spark.operators.cacheutil import persist_tracked as _persist
@@ -38,9 +39,9 @@ def duplicate_clusters(
     cluster_id = the smallest doc id reachable through the pair graph —
     deterministic across runs and partitionings.
 
-    Convergence is checked per round (one count of changed labels);
-    raises if the graph hasn't settled within ``max_rounds`` (graph
-    diameter > max_rounds — pathological for dup clusters).
+    Convergence is observed on each round's checkpoint; raises if the
+    graph hasn't settled within ``max_rounds`` (graph diameter >
+    max_rounds — pathological for dup clusters).
 
     ``checkpoint_dir``: by default each round truncates lineage with
     ``localCheckpoint`` — fast, but its blocks live on executors, so on
@@ -66,8 +67,8 @@ def duplicate_clusters(
         ).distinct()
     )
     # Checkpoint (eager), NOT persist: each round's plan references
-    # the previous round's labels TWICE (neighbor join + fixpoint
-    # compare), so an un-truncated lineage doubles per round — 2^rounds
+    # the previous round's labels TWICE (neighbor join + label join),
+    # so an un-truncated lineage doubles per round — 2^rounds
     # analyzed-plan nodes OOMs the driver near round 11. Checkpointing
     # cuts the plan to the materialized partitions every round.
     labels = _ckpt(
@@ -81,8 +82,11 @@ def duplicate_clusters(
             .groupBy("src")
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = _ckpt(
+        # a label changes iff nmin < label; the round's checkpoint fills the count
+        changed = Observation()
+        labels = _ckpt(
             labels.join(neighbor_min, labels["id"] == neighbor_min["src"], "left")
+            .observe(changed, F.sum((F.col("nmin") < F.col("label")).cast("long")).alias("n"))
             .select(
                 "id",
                 F.least(
@@ -90,14 +94,7 @@ def duplicate_clusters(
                 ).alias("label"),
             )
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if not changed.get["n"]:
             break
     else:
         msg = f"connected components did not converge in {max_rounds} rounds"

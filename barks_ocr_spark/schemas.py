@@ -106,6 +106,7 @@ CHECKPOINT_SCHEMA = StructType(
         StructField("snapshot_id", LongType(), False),
         StructField("pages_processed", LongType(), False),
         StructField("spans_emitted", LongType(), False),
+        StructField("docs_empty", LongType(), False),
         StructField("ocr_empty_rate", DoubleType(), False),
     ]
 )

@@ -3,11 +3,13 @@
 Semantics rebuilt from the reference:
 - R1 skip-if-output-exists (`pipeline/batch_ocr.py:83-86`) → left-anti
   join of input docs against already-committed result doc_ids.
-- R3 job-state gating / R5 backup lineage → snapshot commits: results
-  only become visible when the manifest commit lands, so a killed run
-  re-processes its uncommitted work and never duplicates committed work.
+- R3 job-state gating / R5 backup lineage → one snapshot commit per
+  run: results and their lineage only become visible when the manifest
+  commit lands, so a killed run re-processes its uncommitted work and
+  never duplicates committed work.
 - R6 checkpoint-on-progress (`tools/florence_check.py:867-931`) → a
-  checkpoint table row per (snapshot, partition) with lineage metrics.
+  checkpoint row per (snapshot, partition) with lineage metrics,
+  published by that same commit: every committed run has its lineage.
 
 At 10^12 docs the anti-join is doc_id-hash against the result table's
 doc_id column only (column-pruned scan) — shuffle on the join key with
@@ -18,21 +20,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from barks_ocr_spark.operators import extraction
-from barks_ocr_spark.schemas import DOCUMENTS_SPANS_SCHEMA
+from barks_ocr_spark.schemas import CHECKPOINT_SCHEMA
 from barks_ocr_spark.sources.snapshots import SnapshotTable
-
-_DONE_IDS = StructType([DOCUMENTS_SPANS_SCHEMA["doc_id"]])
 
 
 class ExtractionJob:
-    """Resumable extraction over a docs table into a snapshot table."""
+    """Resumable extraction over a docs table into a snapshot table; the
+    checkpoint rows of each committed run go under ``checkpoint_path``."""
 
     def __init__(self, result_path: str, checkpoint_path: str) -> None:
-        self.results = SnapshotTable(result_path)
-        self.checkpoints = SnapshotTable(checkpoint_path)
+        self.results = SnapshotTable(result_path, lineage_path=checkpoint_path)
 
     def pending(
         self, spark: SparkSession, docs: DataFrame, version_col: str | None = None
@@ -42,27 +41,20 @@ class ExtractionJob:
         version they were last processed at (R2 — the reference's
         mtime-freshness rule, `pipeline/gemini_grouper.py:131-136`,
         keyed on an explicit monotonic version instead of wall clock)."""
-        if version_col is None:
-            # the results' doc_id is the extraction output's: a known
-            # type, so the anti-join side is read without inference
-            done = self.results.read(spark, schema=_DONE_IDS)
-            return docs if done is None else docs.join(done, "doc_id", "left_anti")
         done = self.results.read(spark)
         if done is None:
             return docs
-        if version_col in done.columns:
-            latest = done.groupBy("doc_id").agg(
-                F.max(version_col).alias("_done_version")
+        if version_col is None or version_col not in done.columns:
+            return docs.join(done.select("doc_id"), "doc_id", "left_anti")
+        latest = done.groupBy("doc_id").agg(F.max(version_col).alias("_done_version"))
+        return (
+            docs.join(latest, "doc_id", "left")
+            .filter(
+                F.col("_done_version").isNull()
+                | (F.col(version_col) > F.col("_done_version"))
             )
-            return (
-                docs.join(latest, "doc_id", "left")
-                .filter(
-                    F.col("_done_version").isNull()
-                    | (F.col(version_col) > F.col("_done_version"))
-                )
-                .drop("_done_version")
-            )
-        return docs.join(done.select("doc_id"), "doc_id", "left_anti")
+            .drop("_done_version")
+        )
 
     def run(
         self,
@@ -72,13 +64,13 @@ class ExtractionJob:
         num_partitions: int | None = None,
         version_col: str | None = None,
     ) -> dict:
-        """Process all pending docs; commit one snapshot + checkpoint rows.
+        """Process all pending docs; commit them and their checkpoint rows.
 
         Returns a summary dict. Calling again after success is a no-op
         (zero pending) that stops after counting the pending docs, before
         pass 1 and the kernel; calling after a mid-run kill re-processes only
-        the uncommitted docs — exactly-once in effect. With
-        ``version_col`` (a monotonic version column on ``docs``),
+        the uncommitted docs — exactly-once in effect, checkpoint rows
+        included. With ``version_col`` (a monotonic version column on ``docs``),
         updated docs are re-processed and the version is recorded with
         the result (R2); read the latest per doc via
         :meth:`read_results_latest`.
@@ -116,23 +108,15 @@ class ExtractionJob:
                     pending.select("doc_id", version_col), "doc_id"
                 )
             # Metrics + data from the same computation: the snapshot
-            # write fills the cache the metrics read.
+            # write fills the cache the lineage rows read.
             result = result.persist()
             try:
-                sid = self.results.append(result, meta={"docs": n})
-                metrics = extraction.extraction_metrics(result).withColumn(
-                    "snapshot_id", F.lit(sid).cast("long")
-                )
-                self.checkpoints.append(
-                    metrics.select(
-                        "partition_id",
-                        "snapshot_id",
-                        "pages_processed",
-                        "spans_emitted",
-                        "docs_empty",
-                        "ocr_empty_rate",
-                    ),
-                    meta={"snapshot_id": sid},
+                sid = self.results.append(
+                    result,
+                    meta={"docs": n},
+                    lineage=lambda sid: extraction.extraction_metrics(result)
+                    .withColumn("snapshot_id", F.lit(sid).cast("long"))
+                    .select(*CHECKPOINT_SCHEMA.names),
                 )
                 return {"snapshot_id": sid, "docs": n}
             finally:
@@ -162,4 +146,5 @@ class ExtractionJob:
         )
 
     def read_checkpoints(self, spark: SparkSession) -> DataFrame | None:
-        return self.checkpoints.read(spark)
+        """Checkpoint rows of every committed run, in ``CHECKPOINT_SCHEMA``."""
+        return self.results.read_lineage(spark, CHECKPOINT_SCHEMA)
